@@ -5,6 +5,9 @@ NOT part of the frozen driver bench: used to attribute wall time to
 scan / staging / Python-boundary / kernel for OPTIMIZATION_r06.md.
 Each probe is labeled via setJobDescription and timed as min-of-3 after
 one warm-up.
+
+Usage: ``python bench_extra.py`` runs the noop probes;
+``python bench_extra.py sweep [query ...]`` times registry queries.
 """
 from __future__ import annotations
 
@@ -44,8 +47,7 @@ def main():
 
     from extract_ocr_spark.datagen import spans_from_flat_documents
     from extract_ocr_spark.pipeline import (
-        _EXTRACT_DIGEST_SCHEMA, _extract_digest_batches, extract_digest_df,
-        salted_repartition)
+        _EXTRACT_DIGEST_SCHEMA, extract_digest_df, salted_repartition)
     from extract_ocr_spark.session import get_spark
 
     spark = get_spark(f"local[{CPUS}]", app_name="bench_extra",
@@ -55,7 +57,7 @@ def main():
     out = {}
 
     corpus_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              ".bench_data", f"spans_v3_120000")
+                              ".bench_data", "spans_v3_120000")
     docs = spark.read.parquet(corpus_dir)
 
     def boundary_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -106,10 +108,6 @@ def main():
     spark.stop()
 
 
-if __name__ == "__main__" and (len(sys.argv) < 2 or sys.argv[1] != "sweep"):
-    main()
-
-
 def sweep_registry():
     """Time every registry query at the bench SF (one warm-up + best-of-2,
     steal-recorded). Output: one JSON line per query to stdout — the
@@ -157,5 +155,8 @@ def sweep_registry():
     spark.stop()
 
 
-if __name__ == "__main__" and len(sys.argv) > 1 and sys.argv[1] == "sweep":
-    sweep_registry()
+if __name__ == "__main__":
+    if len(sys.argv) > 1 and sys.argv[1] == "sweep":
+        sweep_registry()
+    else:
+        main()

@@ -35,13 +35,6 @@ _WORDS = (
     "lineage metric span markdown extract content heading paragraph anchor"
 ).split()
 
-_LANG_FILLER = {
-    "en": "the of and to in is it that for on",
-    "es": "el la de que y en los se del las",
-    "fr": "le de la et les des en un du une",
-}
-
-
 def _sentence(rng: random.Random, n: int) -> str:
     return " ".join(rng.choice(_WORDS) for _ in range(n))
 

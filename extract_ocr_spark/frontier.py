@@ -84,14 +84,19 @@ def bfs_frontier(spark: SparkSession, edges: DataFrame, seeds: list[str],
             .join(visited.select("doc_id"), "doc_id", "left_anti")
             .withColumn("depth", F.lit(depth))
         )
-        # page cap: deterministic admission order (lowest doc_id first)
-        nxt = nxt.orderBy("doc_id").limit(max(0, max_pages - n_visited))
         # Materialize per level: each iteration's lineage is durable and
         # the plan doesn't grow unboundedly across iterations.
         nxt = nxt.localCheckpoint(eager=True)
         n_new = nxt.count()  # counts the checkpointed level, not the union
         if n_new == 0:
             break
+        if n_visited + n_new > max_pages:
+            # Page cap, only when it binds (Spark's top-k allocates a queue
+            # of the limit's size up front, so the registry's 10**9 cap
+            # cost gigabytes per level); lowest doc_id admitted first.
+            n_new = max_pages - n_visited
+            nxt = (nxt.orderBy("doc_id").limit(n_new)
+                   .localCheckpoint(eager=True))
         n_visited += n_new
         visited = visited.unionByName(nxt)
         frontier = nxt

@@ -278,25 +278,6 @@ def get_text(node: Node, sep: str = " ", strip: bool = False) -> str:
     return sep.join(parts)
 
 
-def _has_id(node: Node, id_: str) -> bool:
-    return node.attrs.get("id") == id_
-
-
-def _role_div(node: Node, role: str) -> bool:
-    return node.tag == "div" and node.attrs.get("role") == role
-
-
-_MAIN_SELECTORS = (
-    lambda n: n.tag == "main",
-    lambda n: n.tag == "article",
-    lambda n: _has_id(n, "topic-content"),
-    lambda n: _has_id(n, "topic"),
-    lambda n: _has_id(n, "rh-topic"),
-    lambda n: _role_div(n, "main"),
-    lambda n: _role_div(n, "document"),
-)
-
-
 def link_density(node: Node) -> float:
     """chars of text under <a> descendants / total chars of text."""
     total = len(get_text(node, " ", strip=True))
@@ -364,10 +345,11 @@ def pick_main_content(root: Node, mode: str = "reference") -> Node:
     ``mode="density"``: fallback scores divs by
     ``text_len * (1 - link_density)`` (Boilerpipe-style), same tie-break.
     """
-    # Single DFS pass records the first doc-order match per selector
-    # (equivalent to 7 sequential find_first traversals); selector
-    # predicates are inlined — attrs are only consulted for div/the two
-    # id-bearing selectors, so the common node costs two tag compares.
+    # Single DFS pass records the first doc-order match per selector of
+    # the module docstring's priority list (equivalent to 7 sequential
+    # find_first traversals); selector predicates are inlined — attrs are
+    # only consulted for div/the two id-bearing selectors, so the common
+    # node costs two tag compares.
     first_match: list[Node | None] = [None] * 7
     remaining = 7
     for n in root.iter():

@@ -90,12 +90,12 @@ def spread_input(df, key: str = "doc_id"):
 # ``F.aggregate(F.zip_with(...))`` lambdas are INTERPRETED per element —
 # a 64-dim cosine costs ~3 HOF folds per pair, and on an O(n²) pair
 # frame that interpretation dominated the whole registry sweep
-# (embedding_neardup_pairs: 118 s at sf0.1, ~60 µs/pair). The helpers
-# below unroll the identical left fold into a plain expression chain —
-# ``((0.0 + t0) + t1) + …`` — which whole-stage codegen compiles, with a
-# runtime size guard falling back to the original HOF fold for arrays
-# of any other length, so the float result is bit-identical for every
-# input (same seed, same association order, IEEE multiply is exact
+# (embedding_neardup_pairs: 118 s at sf0.1, ~60 µs/pair). ``fold_dot``
+# and ``fold_sq`` unroll the identical left fold into a plain expression
+# chain — ``((0.0 + t0) + t1) + …`` — which whole-stage codegen compiles,
+# with a runtime size guard falling back to the original HOF fold for
+# arrays of any other length, so the float result is bit-identical for
+# every input (same seed, same association order, IEEE multiply is exact
 # either way; verified pairwise over all sf0.1 pairs, zero bit diffs).
 
 def _hof_dot(a, b):
@@ -124,19 +124,6 @@ def fold_dot(a, b, dim: int):
                   expr).otherwise(_hof_dot(a, b))
 
 
-def fold_dot_lit(a, q, dim: int | None = None):
-    """Exact-parity dot of an array column with a Python list of floats
-    (the literal side never needs a guard — its length IS dim)."""
-    from pyspark.sql import functions as F
-
-    dim = len(q) if dim is None else dim
-    expr = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a[i] * F.lit(float(q[i]))
-    qlit = F.array(*[F.lit(float(v)) for v in q])
-    return F.when(F.size(a) == dim, expr).otherwise(_hof_dot(a, qlit))
-
-
 def fold_sq(a, dim: int):
     """Exact-parity sum of squares of an array<double> column (the
     squared L2 norm; wrap in F.sqrt for the norm)."""
@@ -146,77 +133,6 @@ def fold_sq(a, dim: int):
     for i in range(dim):
         expr = expr + a[i] * a[i]
     return F.when(F.size(a) == dim, expr).otherwise(_hof_sq(a))
-
-
-def fold_d2_lit(a, c, dim: int | None = None):
-    """Exact-parity squared euclidean distance of an array column to a
-    Python list of floats: unrolled ``(a_i - c_i)²`` left fold."""
-    from pyspark.sql import functions as F
-
-    dim = len(c) if dim is None else dim
-    expr = F.lit(0.0)
-    for i in range(dim):
-        d = a[i] - F.lit(float(c[i]))
-        expr = expr + d * d
-    clit = F.array(*[F.lit(float(v)) for v in c])
-    hof = F.aggregate(F.zip_with(a, clit, lambda x, y: (x - y) * (x - y)),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    return F.when(F.size(a) == dim, expr).otherwise(hof)
-
-
-# Integer (BIGINT) fold variants for the quantized paths (int8 scorer,
-# PQ codebooks, k-means on quantized vectors). Integer addition is
-# associative, so the unrolled sum is exactly the HOF fold's value; the
-# guard still mirrors the HOF's null/length semantics.
-
-def fold_dot_long(a, b, dim: int):
-    from pyspark.sql import functions as F
-
-    expr = F.lit(0).cast("long")
-    for i in range(dim):
-        expr = expr + a[i] * b[i]
-    hof = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return F.when((F.size(a) == dim) & (F.size(b) == dim),
-                  expr).otherwise(hof)
-
-
-def fold_dot_lit_long(a, q, dim: int | None = None):
-    from pyspark.sql import functions as F
-
-    dim = len(q) if dim is None else dim
-    expr = F.lit(0).cast("long")
-    for i in range(dim):
-        expr = expr + a[i] * F.lit(int(q[i])).cast("long")
-    qlit = F.array(*[F.lit(int(v)).cast("long") for v in q])
-    hof = F.aggregate(F.zip_with(a, qlit, lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return F.when(F.size(a) == dim, expr).otherwise(hof)
-
-
-def fold_sq_long(a, dim: int):
-    from pyspark.sql import functions as F
-
-    expr = F.lit(0).cast("long")
-    for i in range(dim):
-        expr = expr + a[i] * a[i]
-    hof = F.aggregate(F.transform(a, lambda x: x * x),
-                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return F.when(F.size(a) == dim, expr).otherwise(hof)
-
-
-def fold_d2_lit_long(a, c, dim: int | None = None):
-    from pyspark.sql import functions as F
-
-    dim = len(c) if dim is None else dim
-    expr = F.lit(0).cast("long")
-    for i in range(dim):
-        d = a[i] - F.lit(int(c[i])).cast("long")
-        expr = expr + d * d
-    clit = F.array(*[F.lit(int(v)).cast("long") for v in c])
-    hof = F.aggregate(F.zip_with(a, clit, lambda x, y: (x - y) * (x - y)),
-                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return F.when(F.size(a) == dim, expr).otherwise(hof)
 
 
 def all_queries():

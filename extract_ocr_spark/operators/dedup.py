@@ -418,15 +418,6 @@ ORDER BY a_id, b_id
 _EMB_DIM = 64  # the embeddings table's fixed dimensionality
 
 
-def _cosine(a, b):
-    # r6: unrolled codegen folds (bit-identical to the HOF folds — see
-    # operators.fold_dot) instead of three interpreted lambdas per pair.
-    dot = fold_dot(a, b, _EMB_DIM)
-    na = F.sqrt(fold_sq(a, _EMB_DIM))
-    nb = F.sqrt(fold_sq(b, _EMB_DIM))
-    return dot / (na * nb)
-
-
 def embedding_neardup_pairs(spark, sf_dir):
     """Exact cosine ≥ 0.4 pairs over the embeddings table (double math on
     both sides for bit-identical comparison). Deliberately O(n²) — the

@@ -200,8 +200,6 @@ ORACLES["hypertable_rollup"] = HYPERTABLE_ROLLUP_SQL
 # -- Windowed conversion funnel --------------------------------------------------
 
 FUNNEL_WINDOW_US = 6 * 3600 * 1_000_000  # each stage must follow within 6h
-# event_type -> funnel stage code (everything else is a non-funnel event)
-_FUNNEL_CODES = {"view": 1, "click": 2, "purchase": 3}
 
 
 def event_funnel_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -47,87 +47,22 @@ from .schemas import EXTRACTED_SCHEMA
 # are ~100× median ≈ 800 KB).
 BIG_DOC_BYTES = 256 << 10
 
-_EXTRACT_FULL_SCHEMA = T.StructType(
-    [
-        *EXTRACTED_SCHEMA.fields,
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("spans_in", T.IntegerType(), False),
-        T.StructField("spans_out", T.IntegerType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def _spans_to_records(spans) -> list[dict]:
-    """Arrow hands array<struct> to pandas as a sequence of dicts."""
-    if spans is None:
-        return []
-    return list(spans)
-
-
-def _extract_batches(mode: str, waf_integration: bool = True):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            spans_col = [_spans_to_records(s) for s in pdf["spans"]]
-            outs = []
-            errors: list[str | None] = []
-            walls: list[int] = []
-            # Per-document containment: one malformed document becomes an
-            # 'error' lineage event, never a failed task/stage (the
-            # reference's error-event path, crawl.py:968-979).
-            for i, (d, s) in enumerate(zip(doc_ids, spans_col)):
-                t0 = time.perf_counter()
-                try:
-                    outs.append(extract_doc(
-                        d, s, mode=mode, waf_integration=waf_integration))
-                    errors.append(None)
-                except Exception as exc:  # noqa: BLE001
-                    outs.append([])
-                    errors.append(f"{type(exc).__name__}: {exc}"[:500])
-                    if d is None:
-                        # keep the output schema's non-null doc_id
-                        doc_ids[i] = f"<null-doc-id:{pid}:{i}>"
-                # true per-doc wall (a skewed doc no longer smears its
-                # cost across batch-mates in the metrics table)
-                walls.append(int((time.perf_counter() - t0) * 1000))
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "out_spans": outs,
-                    "partition_id": [pid] * len(doc_ids),
-                    "spans_in": [len(s) for s in spans_col],
-                    "spans_out": [len(o) for o in outs],
-                    "bytes_in": [doc_size_bytes(s) for s in spans_col],
-                    "bytes_out": [
-                        sum(len(sp["text"]) for sp in o if sp["text"]) for o in outs
-                    ],
-                    "wall_ms": walls,
-                    "error": errors,
-                }
-            )
-
-    return fn
-
-
-_EXTRACT_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("out_sha", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("spans_in", T.IntegerType(), False),
-        T.StructField("spans_out", T.IntegerType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
+# Per-document stats shared by both return channels (spans / digest).
+_STATS_FIELDS = [
+    T.StructField("partition_id", T.IntegerType(), False),
+    T.StructField("spans_in", T.IntegerType(), False),
+    T.StructField("spans_out", T.IntegerType(), False),
+    T.StructField("bytes_in", T.LongType(), False),
+    T.StructField("bytes_out", T.LongType(), False),
+    T.StructField("wall_ms", T.LongType(), False),
+    T.StructField("error", T.StringType(), True),
+]
+_EXTRACT_FULL_SCHEMA = T.StructType([*EXTRACTED_SCHEMA.fields, *_STATS_FIELDS])
+_EXTRACT_DIGEST_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), False),
+    T.StructField("out_sha", T.StringType(), False),
+    *_STATS_FIELDS,
+])
 
 
 def _digest_spans(spans: list[dict]) -> str:
@@ -151,47 +86,49 @@ def _digest_spans(spans: list[dict]) -> str:
     return h.hexdigest()
 
 
-def _extract_digest_batches(mode: str):
-    """Same kernel work as _extract_batches, but the Arrow return payload
-    carries a 64-hex digest of the rendered spans instead of the spans
-    themselves. This is the benchmark reducer: when the consumer is an
-    aggregate (not a sink), shipping every rendered byte Python→JVM is
-    pure self-inflicted memory-bus traffic; the digest still forces full
-    rendering (every output byte feeds sha256) while shrinking the return
-    channel ~1000×. Production writes use _extract_batches — a sink needs
-    the bytes."""
+def _extract_batches(mode: str, waf_integration: bool, digest: bool):
+    """The per-document extraction loop behind every entry point.
+
+    ``digest=False`` returns the rendered spans (``out_spans``), which a
+    sink needs. ``digest=True`` returns a 64-hex sha256 of them
+    (``out_sha``) instead: every output byte still feeds the hash, so the
+    kernel work is identical, but the Python→JVM return channel shrinks
+    ~1000× for consumers that only aggregate (the benchmark reducer)."""
+    empty = "" if digest else []
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         for pdf in batches:
             doc_ids = pdf["doc_id"].tolist()
-            spans_col = [_spans_to_records(s) for s in pdf["spans"]]
-            shas, errors = [], []
-            spans_out, bytes_out = [], []
-            walls: list[int] = []
+            # Arrow hands array<struct> to pandas as a sequence of dicts.
+            spans_col = [list(s) if s is not None else [] for s in pdf["spans"]]
+            rows = []
+            # Per-document containment: one malformed document becomes an
+            # 'error' lineage event, never a failed task/stage (the
+            # reference's error-event path, crawl.py:968-979).
             for i, (d, s) in enumerate(zip(doc_ids, spans_col)):
                 t0 = time.perf_counter()
                 try:
-                    out = extract_doc(d, s, mode=mode)
-                    shas.append(_digest_spans(out))
-                    spans_out.append(len(out))
-                    bytes_out.append(
-                        sum(len(sp["text"]) for sp in out if sp["text"]))
-                    errors.append(None)
+                    out = extract_doc(d, s, mode=mode,
+                                      waf_integration=waf_integration)
+                    row = (_digest_spans(out) if digest else out, len(out),
+                           sum(len(sp["text"]) for sp in out if sp["text"]),
+                           None)
                 except Exception as exc:  # noqa: BLE001
-                    shas.append("")
-                    spans_out.append(0)
-                    bytes_out.append(0)
-                    errors.append(f"{type(exc).__name__}: {exc}"[:500])
+                    row = (empty, 0, 0, f"{type(exc).__name__}: {exc}"[:500])
                     if d is None:
+                        # keep the output schema's non-null doc_id
                         doc_ids[i] = f"<null-doc-id:{pid}:{i}>"
-                # true per-doc wall (no even smearing across batch-mates)
-                walls.append(int((time.perf_counter() - t0) * 1000))
+                # true per-doc wall (a skewed doc no longer smears its
+                # cost across batch-mates in the metrics table)
+                rows.append((*row, int((time.perf_counter() - t0) * 1000)))
+            outs, spans_out, bytes_out, errors, walls = (
+                map(list, zip(*rows)) if rows else ([],) * 5)
             yield pd.DataFrame(
                 {
                     "doc_id": doc_ids,
-                    "out_sha": shas,
+                    "out_sha" if digest else "out_spans": outs,
                     "partition_id": [pid] * len(doc_ids),
                     "spans_in": [len(s) for s in spans_col],
                     "spans_out": spans_out,
@@ -205,23 +142,34 @@ def _extract_digest_batches(mode: str):
     return fn
 
 
+def _extract(docs: DataFrame, *, mode: str, partitions: int | None,
+             waf_integration: bool, digest: bool) -> DataFrame:
+    """Staging + the extraction stage. A streaming source is not staged:
+    its micro-batch is already bounded by the source's trigger limits."""
+    if not docs.isStreaming:
+        parts = partitions or int(docs.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "32"))
+        docs = salted_repartition(docs, parts)
+    return docs.mapInPandas(
+        _extract_batches(mode, waf_integration, digest),
+        schema=_EXTRACT_DIGEST_SCHEMA if digest else _EXTRACT_FULL_SCHEMA)
+
+
 def extract_digest_df(docs: DataFrame, *, mode: str = "reference",
                       partitions: int | None = None) -> DataFrame:
-    """Extraction with a digest-only return channel (see
-    _extract_digest_batches) — the aggregate-consumer path."""
-    spark = docs.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    staged = salted_repartition(docs, parts)
-    return staged.mapInPandas(
-        _extract_digest_batches(mode), schema=_EXTRACT_DIGEST_SCHEMA)
+    """Extraction with the digest-only return channel (``out_sha`` plus
+    the stats columns) — the aggregate-consumer path."""
+    return _extract(docs, mode=mode, partitions=partitions,
+                    waf_integration=True, digest=True)
 
 
-def salted_repartition(df: DataFrame, partitions: int,
-                       big_doc_bytes: int = BIG_DOC_BYTES,
-                       shuffle_small: bool | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """Skew-aware staging for the extraction UDF.
 
-    Only the heavy tail is shuffled: docs above the size threshold are
+    ``partitions`` is the requested exchange width, clamped to
+    ``2 × defaultParallelism`` (two task waves per core; see below).
+
+    Only the heavy tail is shuffled: docs above ``BIG_DOC_BYTES`` are
     hash-repartitioned on doc_id into their own partition set, so one
     oversized PDF never serializes a partition of small docs behind it.
     Small docs keep their source partitioning (parquet splits are already
@@ -229,13 +177,12 @@ def salted_repartition(df: DataFrame, partitions: int,
     shuffling the full corpus to fix a 1% heavy tail would move ~99 TB for
     nothing.
 
-    ``shuffle_small=None`` (default) is scale-adaptive: when the source
-    has fewer partitions than the requested parallelism (a single small
-    file, a collapsed listing), keeping the source partitioning would
-    serialize the CPU-heavy extraction UDF behind a handful of tasks — so
-    everything is shuffled once. At real scale the scan has ≥ ``partitions``
-    splits and the heavy-tail-only path is kept. Pass ``True``/``False``
-    to force either behaviour (e.g. ``True`` for a known-skewed source).
+    The rule is scale-adaptive: when the source has fewer partitions than
+    the (clamped) parallelism (a single small file, a collapsed listing),
+    keeping the source partitioning would serialize the CPU-heavy
+    extraction UDF behind a handful of tasks — so everything is shuffled
+    once. At real scale the scan has ≥ ``partitions`` splits and the
+    heavy-tail-only path is kept.
     """
     # Cap the exchange width at two task waves per core: every task of a
     # Python-eval stage pays a fixed dispatch cost (worker handshake +
@@ -249,9 +196,7 @@ def salted_repartition(df: DataFrame, partitions: int,
     # whole stage.
     partitions = min(partitions,
                      2 * df.sparkSession.sparkContext.defaultParallelism)
-    if shuffle_small is None:
-        shuffle_small = df.rdd.getNumPartitions() < partitions
-    if shuffle_small:
+    if df.rdd.getNumPartitions() < partitions:
         # Every row moves anyway: one hash exchange assigns each doc_id to
         # the same target partition the two-branch union would (same hash
         # function, same partition count), with a single scan and no size
@@ -265,8 +210,8 @@ def salted_repartition(df: DataFrame, partitions: int,
             lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
         ),
     )
-    small = sized.filter(F.col("_size") <= big_doc_bytes)
-    big = sized.filter(F.col("_size") > big_doc_bytes)
+    small = sized.filter(F.col("_size") <= BIG_DOC_BYTES)
+    big = sized.filter(F.col("_size") > BIG_DOC_BYTES)
     out = small.unionByName(big.repartition(partitions, "doc_id"))
     return out.drop("_size")
 
@@ -275,16 +220,14 @@ def extract_df(docs: DataFrame, *, mode: str = "reference",
                partitions: int | None = None,
                with_stats: bool = False,
                waf_integration: bool = True) -> DataFrame:
-    """Transformation-only extraction: documents → extracted spans.
+    """Transformation-only extraction: documents → extracted spans, from a
+    batch or a streaming ``docs`` frame.
 
     ``waf_integration=False`` mirrors the reference's local-seed ingest
     (EP2): only hard WAF block markers drop a page, never the anchor-count
     heuristic (which misfires on browser-saved SPA shells)."""
-    spark = docs.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    staged = salted_repartition(docs, parts)
-    out = staged.mapInPandas(
-        _extract_batches(mode, waf_integration), schema=_EXTRACT_FULL_SCHEMA)
+    out = _extract(docs, mode=mode, partitions=partitions,
+                   waf_integration=waf_integration, digest=False)
     if with_stats:
         return out
     return out.select("doc_id", "out_spans")

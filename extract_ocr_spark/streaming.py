@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .pipeline import _EXTRACT_FULL_SCHEMA, _extract_batches
+from .pipeline import extract_df
 from .schemas import DOCUMENTS_SCHEMA
 
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, event_type string,"
@@ -44,12 +44,10 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
         .option("maxFilesPerTrigger", "8")
         .parquet(input_dir)
     )
-    # No repartition in the stream: the size-class salting is a batch
-    # optimization; the streaming micro-batch is already bounded by
-    # maxFilesPerTrigger. The kernel is identical.
-    extracted = docs.mapInPandas(_extract_batches(mode), schema=_EXTRACT_FULL_SCHEMA)
+    # The same extraction stage as batch; extract_df skips staging on a
+    # streaming source (the micro-batch is bounded by maxFilesPerTrigger).
     writer = (
-        extracted.select("doc_id", "out_spans")
+        extract_df(docs, mode=mode)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)

@@ -110,6 +110,7 @@ def _python_bfs_over(graph, seeds, max_depth, max_pages):
     (11, ["n00", "n13"], 10_000),   # multi-seed, uncapped
     (23, ["n05"], 7),               # tight page cap mid-level
     (37, ["n21", "n02"], 12),       # cap lands exactly on a level edge
+    (11, ["n00", "n13"], 10**9),    # the registry query's cap
 ])
 def test_bfs_random_graph_parity(spark, seed, seeds, max_pages):
     graph = _random_graph(seed)

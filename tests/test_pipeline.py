@@ -210,18 +210,37 @@ def test_density_mode_through_pipeline(spark):
 def test_digest_path_agrees_with_spans_path(spark, docs):
     """The benchmark's digest return channel must perform the identical
     extraction: per-doc sha256 over the spans path's output equals the
-    digest path's out_sha, and the byte/span counters match."""
+    digest path's out_sha, and the byte/span counters match. A contained
+    failure (null doc_id) gets the same error, placeholder doc_id and
+    zeroed counters on both channels, and an empty out_sha."""
     from extract_ocr_spark.pipeline import _digest_spans, extract_digest_df
 
-    spans_rows = extract_df(docs, with_stats=True).collect()
-    digest_rows = {r["doc_id"]: r for r in extract_digest_df(docs).collect()}
-    assert len(digest_rows) == N_DOCS
+    bad = spark.createDataFrame(
+        [(None, [("text", "x", None, 0)])],
+        schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    mixed = docs.unionByName(bad)
+    spans_rows = extract_df(mixed, with_stats=True).collect()
+    digest_rows = {r["doc_id"]: r for r in
+                   extract_digest_df(mixed).collect()}
+    assert len(digest_rows) == N_DOCS + 1
+    failed = [r for r in spans_rows if r["error"] is not None]
+    assert len(failed) == 1
+    assert failed[0]["doc_id"].startswith("<null-doc-id:")
     for r in spans_rows:
         d = digest_rows[r["doc_id"]]
-        expect_sha = _digest_spans([s.asDict() for s in r["out_spans"]])
-        assert d["out_sha"] == expect_sha
+        assert d["error"] == r["error"]
+        assert d["spans_in"] == r["spans_in"]
+        assert d["bytes_in"] == r["bytes_in"]
         assert d["spans_out"] == r["spans_out"]
         assert d["bytes_out"] == r["bytes_out"]
+        if r["error"] is not None:
+            assert d["out_sha"] == ""
+            assert r["out_spans"] == []
+            assert (r["spans_out"], r["bytes_out"]) == (0, 0)
+            continue
+        expect_sha = _digest_spans([s.asDict() for s in r["out_spans"]])
+        assert d["out_sha"] == expect_sha
 
 
 def test_crash_between_output_and_lineage_resumes_clean(spark, tmp_path):
