@@ -28,19 +28,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import BUSY_CLEAN, timed  # noqa: E402
+from bench_extra import digest  # noqa: E402
 from bench_scaling import STEAL_CLEAN  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_NODES = int(os.environ.get("SPARK_GRAFT_GRAPH_NODES", "5000000"))
 LPA_N = int(os.environ.get("SPARK_GRAFT_LPA_ITERS", "3"))
-
-
-def _digest(df):
-    from pyspark.sql import functions as F
-
-    df.agg(F.count(F.lit(1)).alias("n"),
-           F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_000)))
-           .alias("digest")).collect()
 
 
 def main() -> None:
@@ -62,10 +55,10 @@ def main() -> None:
     n_edges = edges.count()   # materialize once; all ops reuse the cache
 
     queries = {
-        "triangle_count": lambda: _digest(triangle_count_df(docs, edges)),
-        "label_propagation": lambda: _digest(
+        "triangle_count": lambda: digest(triangle_count_df(docs, edges)),
+        "label_propagation": lambda: digest(
             label_propagation_df(docs, edges, iters=LPA_N)),
-        "link_prediction": lambda: _digest(link_prediction_df(edges)),
+        "link_prediction": lambda: digest(link_prediction_df(edges)),
     }
     results: dict[str, float] = {}
     runs: dict[str, list] = {}

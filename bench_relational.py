@@ -22,6 +22,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import BUSY_CLEAN, timed  # noqa: E402
+from bench_extra import digest  # noqa: E402
 from bench_scaling import STEAL_CLEAN  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,14 +46,6 @@ QUERY_NAMES = (
 )
 
 
-def _digest(df):
-    from pyspark.sql import functions as F
-
-    df.agg(F.count(F.lit(1)).alias("n"),
-           F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_000)))
-           .alias("digest")).collect()
-
-
 def main() -> None:
     import __spark_entry__ as entry
 
@@ -64,7 +57,7 @@ def main() -> None:
     results: dict[str, float] = {}
     runs: dict[str, list] = {}
     for name in QUERY_NAMES:
-        fn = lambda: _digest(registry[name](spark, SF_DIR))  # noqa: E731
+        fn = lambda: digest(registry[name](spark, SF_DIR))  # noqa: E731
         fn()  # warm (file index + code paths)
         best, rs = timed(fn)
         results[name] = best

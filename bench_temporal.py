@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bench import timed  # noqa: E402
 from bench_scaling import STEAL_CLEAN  # noqa: E402
 from bench import BUSY_CLEAN  # noqa: E402
+from bench_extra import digest  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_EVENTS = int(os.environ.get("SPARK_GRAFT_TEMPORAL_EVENTS", "10000000"))
@@ -45,17 +46,6 @@ N_INTERVALS = int(os.environ.get("SPARK_GRAFT_TEMPORAL_INTERVALS", "20000"))
 
 DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         ".bench_data", f"events_{N_EVENTS}")
-
-
-def _digest(df):
-    """Force full computation of every output column without collecting
-    the result set (the bench.py digest-channel idea)."""
-    from pyspark.sql import functions as F
-
-    # pmod keeps the running sum far from BIGINT overflow (ANSI mode)
-    df.agg(F.count(F.lit(1)).alias("n"),
-           F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_000)))
-           .alias("digest")).collect()
 
 
 def main() -> None:
@@ -80,10 +70,10 @@ def main() -> None:
             .parquet(os.path.join(DATA_DIR, "events.parquet"))
 
     queries = {
-        "asof_join": lambda: _digest(asof_join_query(spark, DATA_DIR)),
-        "range_join_bins": lambda: _digest(
+        "asof_join": lambda: digest(asof_join_query(spark, DATA_DIR)),
+        "range_join_bins": lambda: digest(
             range_join_bins_query(spark, DATA_DIR)),
-        "hypertable_rollup": lambda: _digest(
+        "hypertable_rollup": lambda: digest(
             hypertable_rollup_query(spark, DATA_DIR)),
     }
 
@@ -137,10 +127,10 @@ def main() -> None:
         assert naive_df.count() == binned_df.count()
 
         def naive():
-            _digest(naive_df)
+            digest(naive_df)
 
         def binned():
-            _digest(binned_df)
+            digest(binned_df)
 
         naive()
         best_naive, rs_naive = timed(naive)

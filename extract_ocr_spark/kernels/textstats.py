@@ -50,12 +50,6 @@ def token_count(text: str | None) -> int:
     return len(_TOKEN_RE.findall(text))
 
 
-def whitespace_token_count(text: str | None) -> int:
-    if not text or not text.strip():
-        return 0
-    return len(text.split())
-
-
 def quality_score(text: str | None) -> float:
     """Heuristic document quality in [0,1]: blends length, alpha ratio,
     punctuation ratio, mean word length sanity, and stopword presence."""

@@ -85,6 +85,40 @@ def spread_input(df, key: str = "doc_id"):
     return df.repartition(n, key)
 
 
+def iterate(step, state, *, rounds: int, fixpoint=None, reused=()):
+    """The one loop of the checkpointed iterative operators: persists the
+    loop-invariant ``reused`` frames (unpersisted in a ``finally``), then
+    eagerly localCheckpoints ``state`` and every round's ``step(state)``.
+    Without ``fixpoint``, runs exactly ``rounds`` rounds. With it, ``step``
+    flags changed rows in a boolean ``moved`` column (initial rows start
+    moved; the count is observed on the checkpoint, one action a round);
+    returns, ``moved`` dropped, after the first round moving no row, else
+    raises ``RuntimeError`` naming ``fixpoint``."""
+    from pyspark.sql import Observation, functions as F
+
+    for df in reused:
+        df.persist()
+    try:
+        if fixpoint is not None:
+            state = state.withColumn("moved", F.lit(True))
+        state = state.localCheckpoint(eager=True)
+        for _ in range(rounds):
+            nxt = step(state)
+            if fixpoint is not None:
+                moved = Observation()
+                nxt = nxt.observe(moved, F.count_if("moved").alias("n"))
+            state = nxt.localCheckpoint(eager=True)
+            if fixpoint is not None and moved.get["n"] == 0:
+                return state.drop("moved")
+        if fixpoint is not None:
+            raise RuntimeError(
+                f"{fixpoint} did not converge in {rounds} iterations")
+        return state
+    finally:
+        for df in reused:
+            df.unpersist()
+
+
 # -- r6: codegen-friendly vector folds ----------------------------------------
 #
 # ``F.aggregate(F.zip_with(...))`` lambdas are INTERPRETED per element —

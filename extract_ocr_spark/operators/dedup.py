@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import WS_RE, fold_dot, fold_sq, md5_long
+from . import WS_RE, fold_dot, fold_sq, iterate, md5_long
 
 from ..kernels.dedupkit import lsh_bands, minhash_signature
 
@@ -55,7 +55,9 @@ MINHASH_THRESHOLD = 0.8
 # Shingles present in more than this many documents are dropped before
 # inverted-index self-joins (stop-shingle frequency cap).
 SHINGLE_DF_CAP = 128
-# Refuse the exact O(n²) embedding twin beyond this input size.
+# Refuse the exact O(n²) embedding twin beyond this input size. At the
+# guard its lazy pair checkpoint holds n²/2 = 2×10^8 rows × 28 B ≈ 5.6 GB
+# of executor storage, without lineage: a lost block fails the job.
 MAX_EXACT_PAIR_ROWS = 20_000
 
 _SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed int64
@@ -446,8 +448,8 @@ def embedding_neardup_pairs(spark, sf_dir):
     # Materialize the slim (a_id, b_id, c) pair frame once (lazy local
     # checkpoint): the filter and the round both reference c, and the
     # pushed-down predicate would otherwise re-evaluate the 64-term dot
-    # per reference (measured 19 s vs 3.5 s at sf0.1). Bounded by the
-    # row guard above: ≤ n²/2 × 28-byte rows live in executor storage.
+    # per reference (measured 19 s vs 3.5 s at sf0.1). Bounded by
+    # MAX_EXACT_PAIR_ROWS (worst case stated there).
     slim = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(F.col("a.vec_id").alias("a_id"), F.col("b.vec_id").alias("b_id"),
@@ -483,13 +485,12 @@ def connected_components(labels: DataFrame, edges: DataFrame,
     min) with a pointer-jumping step (comp ← comp of comp — valid because
     every comp value is itself an id in ``labels``), so convergence takes
     O(log diameter) iterations, not O(diameter): a 10⁶-long drift chain
-    converges in ~20 steps where plain propagation needs 10⁶. Every step
-    is localCheckpointed so the plan stays flat; shuffle volume per
-    iteration is O(edges) + O(nodes). Raises ``RuntimeError`` if the
-    fixpoint is not reached within ``max_iters`` (with jumping, 64 covers
-    any diameter ≤ 2⁶⁴) — never returns partial labels silently."""
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iters):
+    converges in ~20 steps where plain propagation needs 10⁶. Shuffle
+    volume per iteration is O(edges) + O(nodes). ``iterate`` runs it to
+    fixpoint (labels never increase, so a row moved iff its comp dropped)
+    and raises ``RuntimeError`` past ``max_iters`` (with jumping, 64
+    covers any diameter ≤ 2⁶⁴) — never returns partial labels."""
+    def hop(labels):
         neighbor_min = (
             edges.join(labels, edges.src == labels.id)
             .groupBy(F.col("dst").alias("id"))
@@ -497,33 +498,25 @@ def connected_components(labels: DataFrame, edges: DataFrame,
         )
         stepped = (
             labels.join(neighbor_min, "id", "left")
-            .select("id", F.least("comp", F.coalesce("ncomp", "comp"))
+            .select("id", F.col("comp").alias("old"),
+                    F.least("comp", F.coalesce("ncomp", "comp"))
                     .alias("comp"))
-            # materialize: both sides of the pointer-jump join read this —
-            # unmaterialized, the O(edges) neighbor-min join would execute
-            # twice per iteration
+            # materialize: both sides of the pointer-jump join read this;
+            # unmaterialized, the O(edges) neighbor-min join runs twice
             .localCheckpoint(eager=True)
         )
         # pointer jump: comp ← label of comp (path halving)
         parent = stepped.select(F.col("id").alias("pid"),
                                 F.col("comp").alias("pcomp"))
-        new_labels = (
+        jumped = F.least("comp", F.coalesce("pcomp", "comp"))
+        return (
             stepped.join(parent, stepped.comp == parent.pid, "left")
-            .select("id", F.least("comp", F.coalesce("pcomp", "comp"))
-                    .alias("comp"))
-            .localCheckpoint(eager=True)
+            .select("id", jumped.alias("comp"),
+                    (jumped < F.col("old")).alias("moved"))
         )
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp")).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} iterations "
-        f"(last iteration still changed labels) — refusing to return "
-        f"partial cluster labels")
+
+    return iterate(hop, labels, rounds=max_iters,
+                   fixpoint="connected_components")
 
 
 def neardup_clusters(spark, sf_dir):

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import md5_long
+from . import iterate, md5_long
 from ..kernels.htmlkit import extract_links
 
 _LINKS_SCHEMA = T.StructType(
@@ -338,10 +338,10 @@ def pagerank_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard upgrade).
 
     Scale shape: the (src, dst, deg) edge table is built once and
-    persisted — every iteration reuses its shuffle partitioning for the
-    contribution join; per-iteration cost is the inherent PageRank
-    shuffle (join on src, aggregate on dst, left-join the node set),
-    and each iteration localCheckpoints so the plan never grows.
+    reused by every iteration's contribution join; per-iteration cost is
+    the inherent PageRank shuffle (join on src, aggregate on dst,
+    left-join the node set). ``iterate`` runs the PR_ITERS rounds and
+    owns the persist and checkpoint policy.
 
     Float parity: rank values stay bit-identical across engines by
     induction — contributions r/deg are computed from identical doubles
@@ -358,29 +358,26 @@ def pagerank_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ((F.col("doc_id") * 3 + 7) % n).alias("dst"))
     edges = e1.unionByName(e2).distinct()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    esrc = edges.join(outdeg, "src").persist()
-    try:
-        ranks = docs.select(
-            F.col("doc_id").alias("v"),
-            (F.lit(1.0) / F.lit(n)).alias("r"))
-        for _ in range(PR_ITERS):
-            contrib = (esrc.join(ranks, esrc["src"] == ranks["v"])
-                       .select(esrc["dst"].alias("t"), esrc["src"],
-                               (ranks["r"] / esrc["deg"]).alias("term")))
-            summed = contrib.groupBy("t").agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("src", "term"))),
-                    F.lit(0.0), lambda a, x: a + x["term"]).alias("m"))
-            ranks = (docs.select(F.col("doc_id").alias("v"))
-                     .join(summed, F.col("v") == F.col("t"), "left")
-                     .select(
-                         "v",
-                         (F.lit(_PR_TELEPORT) / F.lit(n)
-                          + F.lit(PR_D) * F.coalesce("m", F.lit(0.0)))
-                         .alias("r"))
-                     .localCheckpoint(eager=True))
-    finally:
-        esrc.unpersist()
+    esrc = edges.join(outdeg, "src")
+
+    def power_step(ranks):
+        contrib = (esrc.join(ranks, esrc["src"] == ranks["v"])
+                   .select(esrc["dst"].alias("t"), esrc["src"],
+                           (ranks["r"] / esrc["deg"]).alias("term")))
+        summed = contrib.groupBy("t").agg(
+            F.aggregate(
+                F.array_sort(F.collect_list(F.struct("src", "term"))),
+                F.lit(0.0), lambda a, x: a + x["term"]).alias("m"))
+        return (docs.select(F.col("doc_id").alias("v"))
+                .join(summed, F.col("v") == F.col("t"), "left")
+                .select("v", (F.lit(_PR_TELEPORT) / F.lit(n)
+                              + F.lit(PR_D) * F.coalesce("m", F.lit(0.0)))
+                        .alias("r")))
+
+    ranks = iterate(power_step,
+                    docs.select(F.col("doc_id").alias("v"),
+                                (F.lit(1.0) / F.lit(n)).alias("r")),
+                    rounds=PR_ITERS, reused=(esrc,))
     return (ranks.select(F.col("v").alias("doc_id"),
                          F.round("r", 6).alias("pagerank"))
             .orderBy("doc_id"))
@@ -1113,10 +1110,10 @@ def label_propagation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per iteration, one join of the label table onto the
     symmetrized adjacency (shuffle on nbr == v), one (node, label) count
     with map-side partial aggregation, one arg-min rollup, one left join
-    back to the node set; each iteration localCheckpoints so the plan
-    stays flat (the kmeans/pagerank discipline). Label skew (a community
-    absorbing most of the graph) lands in the COUNT's partial aggregate,
-    not the join."""
+    back to the node set; ``iterate`` runs the rounds and owns the
+    persist and checkpoint policy. Label skew (a community absorbing
+    most of the graph) lands in the COUNT's partial aggregate, not the
+    join."""
     edges = _block_edges(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     labels = label_propagation_df(docs, edges)
@@ -1131,30 +1128,27 @@ def label_propagation_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def label_propagation_df(docs: DataFrame, edges: DataFrame,
                          iters: int = LPA_ITERS) -> DataFrame:
-    """The LPA iteration loop over any (doc_id) node frame + canonical
-    edge list; returns the final (v, lbl) table (localCheckpointed each
-    iteration). Shared by the sf_dir query and bench_graph.py."""
-    adj = _sym_adj(edges).persist()
-    try:
-        labels = docs.select(F.col("doc_id").alias("v"),
-                             F.col("doc_id").alias("lbl"))
-        for _ in range(iters):
-            got = (adj.join(labels.withColumnRenamed("v", "pv"),
-                            F.col("nbr") == F.col("pv"))
-                   .groupBy("v", "lbl").agg(F.count("*").alias("cnt")))
-            best = (got.groupBy("v")
-                    .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                                        F.col("lbl").alias("l")))
-                         .alias("m"))
-                    .select("v", F.col("m.l").alias("new_lbl")))
-            labels = (docs.select(F.col("doc_id").alias("v"))
-                      .join(best, "v", "left")
-                      .select("v", F.coalesce("new_lbl", F.col("v"))
-                              .alias("lbl"))
-                      .localCheckpoint(eager=True))
-    finally:
-        adj.unpersist()
-    return labels
+    """The LPA rounds over any (doc_id) node frame + canonical edge
+    list, run by ``iterate``; returns the final (v, lbl) table. Shared by
+    the sf_dir query and bench_graph.py."""
+    adj = _sym_adj(edges)
+
+    def lpa_step(labels):
+        got = (adj.join(labels.withColumnRenamed("v", "pv"),
+                        F.col("nbr") == F.col("pv"))
+               .groupBy("v", "lbl").agg(F.count("*").alias("cnt")))
+        best = (got.groupBy("v")
+                .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
+                                    F.col("lbl").alias("l"))).alias("m"))
+                .select("v", F.col("m.l").alias("new_lbl")))
+        return (docs.select(F.col("doc_id").alias("v"))
+                .join(best, "v", "left")
+                .select("v", F.coalesce("new_lbl", F.col("v")).alias("lbl")))
+
+    return iterate(lpa_step,
+                   docs.select(F.col("doc_id").alias("v"),
+                               F.col("doc_id").alias("lbl")),
+                   rounds=iters, reused=(adj,))
 
 
 def _lpa_iter_sql(prev: str, cur: str) -> str:
@@ -1277,26 +1271,25 @@ def k_core_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     MONOTONE-SHRINKING iteration shape: the survivor set only loses
     members, so each round's join inputs get cheaper.
 
-    Scale shape: adjacency persisted once; each round is survivor ⋈
-    adjacency ⋈ survivor (two semi-join-shaped equi joins), a counting
-    aggregate with map-side combine, and a localCheckpoint keeping the
-    plan flat. Output = every node with its in-core flag (the true
-    3-core: 200/500 at test scale, pinned against a run-to-fixpoint
-    python reference)."""
+    Scale shape: each round is survivor ⋈ adjacency ⋈ survivor (two
+    semi-join-shaped equi joins) and a counting aggregate with map-side
+    combine; ``iterate`` runs the K_CORE_ITERS rounds and owns the
+    persist and checkpoint policy. Output = every node with its in-core
+    flag (the true 3-core: 200/500 at test scale, pinned against a
+    run-to-fixpoint python reference)."""
     edges = _block_edges(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    adj = _sym_adj(edges).persist()
-    try:
-        surv = adj.select("v").distinct().localCheckpoint(eager=True)
-        for _ in range(K_CORE_ITERS):
-            surv = (adj.join(surv, "v")
-                    .join(surv.withColumnRenamed("v", "nbr"), "nbr")
-                    .groupBy("v").agg(F.count("*").alias("d"))
-                    .filter(F.col("d") >= K_CORE_K)
-                    .select("v")
-                    .localCheckpoint(eager=True))
-    finally:
-        adj.unpersist()
+    adj = _sym_adj(edges)
+
+    def peel(surv):
+        return (adj.join(surv, "v")
+                .join(surv.withColumnRenamed("v", "nbr"), "nbr")
+                .groupBy("v").agg(F.count("*").alias("d"))
+                .filter(F.col("d") >= K_CORE_K)
+                .select("v"))
+
+    surv = iterate(peel, adj.select("v").distinct(), rounds=K_CORE_ITERS,
+                   reused=(adj,))
     return (docs.join(surv.withColumn("flag", F.lit(True)),
                       docs["doc_id"] == surv["v"], "left")
             .select("doc_id",
@@ -1346,57 +1339,42 @@ SSSP_ORACLE_ITERS = SSSP_MAX_ITERS
 def shortest_paths_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted single/multi-source shortest paths over the
     block-community graph (edge weight = 1 + (a+b) % 5, exact integer):
-    synchronous Bellman-Ford relaxation run TO FIXPOINT — the k_core
-    lesson applied up front: the Spark loop stops on a provable
-    convergence witness, not an iteration budget. The witness is the
-    (node_count, sum_of_dists) pair: the reached set only grows and
-    distances only decrease, so the pair is unchanged iff the relaxation
-    step changed nothing. Raises if SSSP_MAX_ITERS rounds don't
-    converge. The oracle unrolls the same SSSP_MAX_ITERS budget plus
-    one verification round and error()s if the witness still moves —
-    the same loud-failure contract as the Spark side; a
-    python-Dijkstra reference test pins the semantics externally.
+    synchronous Bellman-Ford relaxation run TO FIXPOINT by ``iterate``:
+    the loop stops on the first round that shortens no distance
+    (reaching a node shortens it from infinity), and raises if
+    SSSP_MAX_ITERS rounds don't converge. Distances only decrease, so the
+    frozen oracle's witness round (SSSP_ORACLE_ITERS) mirrors this stop
+    rule. A python-Dijkstra reference test pins the semantics externally.
 
     Scale shape: per round ONE equi-join (dist ⋈ directed-adjacency) and
-    one min-aggregate with map-side combine, localCheckpoint keeping the
-    plan flat; adjacency persisted once. On a cluster the upgrade is
-    delta-stepping / frontier-only relaxation (join only last round's
-    improved rows); full relaxation keeps the oracle twin exact here and
-    has the same join/shuffle shape."""
+    one min-aggregate with map-side combine, which also flags the moved
+    rows. On a cluster the upgrade is frontier-only relaxation (join only
+    last round's moved rows); full relaxation keeps the oracle twin exact
+    here and has the same join/shuffle shape."""
     edges = _block_edges(spark, sf_dir)
     w_of = F.lit(1) + (F.col("a") + F.col("b")) % 5
     de = (edges.select("a", "b", w_of.cast("long").alias("w"))
           .unionByName(edges.select(F.col("b").alias("a"),
                                     F.col("a").alias("b"),
-                                    w_of.cast("long").alias("w")))
-          .persist())
+                                    w_of.cast("long").alias("w"))))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    dist = (docs.filter(F.col("doc_id").isin(*SSSP_SEEDS))
-            .select(F.col("doc_id").alias("v"),
-                    F.lit(0).cast("long").alias("dist"))
-            .localCheckpoint(eager=True))
-    try:
-        prev_witness = None
-        for _ in range(SSSP_MAX_ITERS):
-            relax = (dist.join(de, dist["v"] == de["a"])
-                     .select(de["b"].alias("v"),
-                             (F.col("dist") + F.col("w")).alias("dist")))
-            dist = (dist.unionByName(relax)
-                    .groupBy("v").agg(F.min("dist").alias("dist"))
-                    .localCheckpoint(eager=True))
-            row = dist.agg(F.count("*").alias("n"),
-                           F.sum("dist").alias("s")).first()
-            witness = (int(row["n"]), int(row["s"]))
-            if witness == prev_witness:
-                break
-            prev_witness = witness
-        else:
-            raise RuntimeError(
-                f"shortest_paths did not converge in {SSSP_MAX_ITERS} "
-                "rounds")
-    finally:
-        de.unpersist()
-    return dist.select("v", "dist").orderBy("v")
+
+    def relax(dist):
+        reach = (dist.join(de, dist["v"] == de["a"])
+                 .select(de["b"].alias("v"),
+                         (F.col("dist") + F.col("w")).alias("dist")))
+        moved = ~F.col("dist").eqNullSafe(F.col("old"))  # new or shorter
+        return (dist.select("v", "dist", F.col("dist").alias("old"))
+                .unionByName(reach, allowMissingColumns=True)
+                .groupBy("v").agg(F.min("dist").alias("dist"),
+                                  F.min("old").alias("old"))
+                .select("v", "dist", moved.alias("moved")))
+
+    seeds = (docs.filter(F.col("doc_id").isin(*SSSP_SEEDS))
+             .select(F.col("doc_id").alias("v"),
+                     F.lit(0).cast("long").alias("dist")))
+    return iterate(relax, seeds, rounds=SSSP_MAX_ITERS,
+                   fixpoint="shortest_paths", reused=(de,)).orderBy("v")
 
 
 def _sssp_iter_sql(prev: str, cur: str) -> str:
