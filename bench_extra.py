@@ -31,10 +31,12 @@ def noop(df):
 def digest(df):
     """Force full computation of every output column without collecting
     the result set: row count plus an order-free sum of row hashes (pmod
-    keeps the running sum far from BIGINT overflow under ANSI mode)."""
-    df.agg(F.count(F.lit(1)).alias("n"),
-           F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_000)))
-           .alias("digest")).collect()
+    keeps the running sum far from BIGINT overflow under ANSI mode).
+    Returns the ``(n, digest)`` row, for comparing two trees' outputs."""
+    return df.agg(F.count(F.lit(1)).alias("n"),
+                  F.sum(F.pmod(F.xxhash64(*df.columns),
+                               F.lit(1_000_000_000))).alias("digest")
+                  ).collect()[0]
 
 
 def timed(spark, label, fn, reps=3):

@@ -68,7 +68,7 @@ def md5_long(col):
 
 
 def spread_input(df, key: str = "doc_id"):
-    """Scale-adaptive source spread (the dedup._docs policy, shared):
+    """Scale-adaptive source spread (dedup._docs reads through it):
     the driver's test tables are single small parquet files (one input
     split), so CPU-heavy map-side chains (tokenize, shingle, regex)
     would run on one core. When the source has fewer partitions than the
@@ -117,6 +117,41 @@ def iterate(step, state, *, rounds: int, fixpoint=None, reused=()):
     finally:
         for df in reused:
             df.unpersist()
+
+
+def key_pairs(keyed, key: str, id_col: str = "doc_id"):
+    """The one candidate-pair self-join: ``(a_id, b_id, <attr>_a,
+    <attr>_b, shared)``, one row per id pair with ``a_id < b_id`` sharing
+    at least one ``key`` value, ``shared`` = how many. Every other column
+    of ``keyed`` is a per-id attribute, carried for both members and
+    grouped with the pair — keep those small scalars; attach arrays and
+    vectors to the deduplicated pairs with ``pair_sides``."""
+    from pyspark.sql import functions as F
+
+    attrs = [c for c in keyed.columns if c not in (key, id_col)]
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .groupBy(F.col(f"a.{id_col}").alias("a_id"),
+                 F.col(f"b.{id_col}").alias("b_id"),
+                 *[F.col(f"a.{c}").alias(f"{c}_a") for c in attrs],
+                 *[F.col(f"b.{c}").alias(f"{c}_b") for c in attrs])
+        .agg(F.count("*").alias("shared"))
+    )
+
+
+def pair_sides(pairs, side, *cols: str, id_col: str = "doc_id"):
+    """Join ``side``'s ``cols`` onto both members of an ``(a_id, b_id)``
+    pair frame as ``<col>_a`` and ``<col>_b``."""
+    from pyspark.sql import functions as F
+
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            side.select(F.col(id_col).alias(f"{s}_id"),
+                        *[F.col(c).alias(f"{c}_{s}") for c in cols]),
+            f"{s}_id")
+    return pairs
 
 
 # -- r6: codegen-friendly vector folds ----------------------------------------

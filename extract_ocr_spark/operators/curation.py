@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import (WS_CHARS, WS_RE, bigram_array, md5_long, spread_input,
-               tok_array)
+from . import (WS_CHARS, WS_RE, bigram_array, md5_long, pair_sides,
+               spread_input, tok_array)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,8 +1258,8 @@ ORACLES["quantile_normalize"] = QUANTILE_NORMALIZE_SQL
 # Output: per unordered split pair, the leaking-pair count and the
 # worst (max) Jaccard. Integer counts; the jaccard is one division +
 # round(6) on exact integers (the ngram_jaccard form). Scale: the
-# capped pair engine + two equi joins against the map-only split
-# projection; the rollup is ≤ 3 rows.
+# capped shingle pairs (``operators.key_pairs``), the map-only split
+# attached to both members by ``pair_sides``; the rollup is ≤ 3 rows.
 
 from .dedup import JACCARD_THRESHOLD as _LEAK_TAU  # noqa: E402
 
@@ -1272,19 +1272,15 @@ def split_leakage_check_df(docs: DataFrame) -> DataFrame:
 
     sp = split_assign_df(docs).select("doc_id", "split")
     pr = _capped_pair_intersections(docs)
-    j_ok = (F.col("inter") * _LEAK_TAU_DEN
-            >= (F.col("na") + F.col("nb") - F.col("inter"))
+    j_ok = (F.col("shared") * _LEAK_TAU_DEN
+            >= (F.col("n_a") + F.col("n_b") - F.col("shared"))
             * _LEAK_TAU_NUM)
-    jac = F.round(F.col("inter")
-                  / (F.col("na") + F.col("nb") - F.col("inter")), 6)
-    x = (pr.filter(j_ok)
-         .join(sp.select(F.col("doc_id").alias("a_id"),
-                         F.col("split").alias("sa")), "a_id")
-         .join(sp.select(F.col("doc_id").alias("b_id"),
-                         F.col("split").alias("sb")), "b_id")
-         .filter(F.col("sa") != F.col("sb"))
-         .select(F.least("sa", "sb").alias("split_lo"),
-                 F.greatest("sa", "sb").alias("split_hi"),
+    jac = F.round(F.col("shared")
+                  / (F.col("n_a") + F.col("n_b") - F.col("shared")), 6)
+    x = (pair_sides(pr.filter(j_ok), sp, "split")
+         .filter(F.col("split_a") != F.col("split_b"))
+         .select(F.least("split_a", "split_b").alias("split_lo"),
+                 F.greatest("split_a", "split_b").alias("split_hi"),
                  jac.alias("jaccard")))
     return (x.groupBy("split_lo", "split_hi")
             .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),

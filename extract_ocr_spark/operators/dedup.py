@@ -5,10 +5,10 @@ Scale design notes (100 TB):
 - **exact / normalized**: one shuffle on a 16-byte sha key; map-side
   partial aggregation; no data skew (sha keys are uniform).
 - **n-gram Jaccard (exact)**: inverted index on shingles (explode →
-  self-join on shingle → pair-count = |intersection|). Never materializes
-  the O(n²) pair space — only pairs sharing ≥1 shingle — and hot
-  "stop-shingles" (document frequency > ``SHINGLE_DF_CAP``) are dropped
-  before the self-join: one boilerplate sentence shared by 10⁶ docs would
+  ``operators.key_pairs`` on shingle → ``shared`` = |intersection|).
+  Never materializes the O(n²) pair space — only pairs sharing ≥1
+  shingle — and hot "stop-shingles" (document frequency >
+  ``SHINGLE_DF_CAP``) are dropped before the self-join: one boilerplate sentence shared by 10⁶ docs would
   otherwise fan out 10¹² join rows. The DuckDB oracle applies the same
   cap, so the check stays hash-exact; the (documented) cost is recall on
   pairs whose overlap is *only* hot shingles.
@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import WS_RE, fold_dot, fold_sq, iterate, md5_long
+from . import (WS_RE, fold_dot, fold_sq, iterate, key_pairs, md5_long,
+               pair_sides, spread_input)
 
 from ..kernels.dedupkit import lsh_bands, minhash_signature
 
@@ -74,18 +75,7 @@ _HAMMING_MAX = 3
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The test tables are single small parquet files (one input split), so
-    # CPU-heavy downstream stages (shingling, MinHash) would run on one
-    # core: spread rows across the session's parallelism first — a
-    # few-MB shuffle buying a 30× stage speedup. On a real deployment the
-    # source is many files/buckets and already at least as parallel as the
-    # session, so the shuffle is skipped entirely (an unconditional
-    # ``repartition`` would move the whole corpus once for nothing).
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n, "doc_id")
+    return spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _with_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -139,37 +129,27 @@ FROM documents GROUP BY 1 ORDER BY sha
 # -- exact n-gram Jaccard via inverted index --------------------------------------
 
 def _capped_pair_intersections(docs: DataFrame) -> DataFrame:
-    """(a_id, b_id, na, nb, inter) for every doc pair sharing at least
-    one non-hot word-3-gram shingle: the ONE inverted-index pair engine
-    behind ngram_jaccard_pairs and containment_pairs (only their
-    coefficients differ — a fix to the shingle index, df-cap discipline,
-    or join must not have to land in two places). ``na``/``nb``
-    denominators use the full (uncapped) shingle sets; ``inter`` counts
+    """(a_id, b_id, n_a, n_b, shared) for every doc pair sharing at least
+    one non-hot word-3-gram shingle: ``key_pairs`` over the df-capped
+    inverted shingle index, the candidate source of the jaccard,
+    containment, estimate, P/R and leakage queries. ``n_a``/``n_b``
+    denominators use the full (uncapped) shingle sets; ``shared`` counts
     only non-hot shingles — both choices mirrored in ``_PAIR_CTE``."""
     sh = _with_shingles(docs).select(
-        F.col("doc_id"), "shingles", F.size("shingles").alias("n_sh"))
+        F.col("doc_id"), "shingles", F.size("shingles").alias("n"))
     inv = _drop_hot_shingles(
-        sh.select("doc_id", "n_sh", F.explode("shingles").alias("shingle")))
-    a = inv.alias("a")
-    b = inv.alias("b")
-    return (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"),
-            F.col("a.n_sh").alias("na"), F.col("b.n_sh").alias("nb"))
-        .agg(F.count("*").alias("inter"))
-    )
+        sh.select("doc_id", "n", F.explode("shingles").alias("shingle")))
+    return key_pairs(inv, "shingle")
 
 
 def ngram_jaccard_pairs(spark, sf_dir):
     """All pairs with word-3-gram Jaccard ≥ 0.5, computed via an inverted
     shingle index (no cross join) with the stop-shingle cap applied
-    before the self-join. ``n_sh`` denominators use the full (uncapped)
-    shingle sets; the intersection counts only non-hot shingles — the
-    oracle mirrors both choices exactly."""
+    before ``key_pairs``. ``n_a``/``n_b`` denominators use the full
+    (uncapped) shingle sets; the intersection counts only non-hot
+    shingles — the oracle mirrors both choices exactly."""
     pairs = _capped_pair_intersections(_docs(spark, sf_dir))
-    j = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    j = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
     return (
         pairs.withColumn("jaccard", F.round(j, 6))
         .filter(j >= JACCARD_THRESHOLD)
@@ -245,37 +225,23 @@ def minhash_lsh_pairs_df(docs: DataFrame) -> DataFrame:
     oracle in practice while shuffling only O(n·bands) rows. Composable
     df-level stage (the registry query below binds it to the sf tables)."""
     # Shingling runs once (persisted for the duration of candidate
-    # generation); the band self-join reads the slim persisted band table
-    # from both sides so the MinHash UDF executes exactly once; the few
-    # candidate pairs — with shingles re-attached — are checkpointed
-    # eagerly, after which every cached input is released: nothing heavy
-    # leaks past this function and nothing heavy computes twice.
+    # generation); the band pairs (``key_pairs``) read the slim persisted
+    # band table from both sides so the MinHash UDF executes exactly
+    # once; the few candidate pairs — with shingles attached by
+    # ``pair_sides`` — are checkpointed eagerly, after which every cached
+    # input is released: nothing heavy leaks past this function and
+    # nothing heavy computes twice.
     sh = _with_shingles(docs).select("doc_id", "shingles").persist()
     banded = _minhash_bands_df(sh).select(
         "doc_id", F.explode("bands").alias("band")).persist()
     try:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        pair_ids = (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("a_id"),
-                    F.col("b.doc_id").alias("b_id"))
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        cands = (
-            pair_ids
-            .join(sh.withColumnRenamed("doc_id", "a_id")
-                    .withColumnRenamed("shingles", "sa"), "a_id")
-            .join(sh.withColumnRenamed("doc_id", "b_id")
-                    .withColumnRenamed("shingles", "sb"), "b_id")
-            .localCheckpoint(eager=True)
-        )
+        cands = pair_sides(key_pairs(banded, "band"), sh,
+                           "shingles").localCheckpoint(eager=True)
     finally:
         banded.unpersist()
         sh.unpersist()
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    union = F.size("shingles_a") + F.size("shingles_b") - inter
     j = inter / union
     return (
         cands.withColumn("jaccard", F.round(j, 6))
@@ -363,23 +329,18 @@ def simhash_pairs(spark, sf_dir):
     multi-block bucketing (5×12-bit blocks, 10 two-block 24-bit tables —
     any pair within distance 3 shares ≥1 exact two-block key, pigeonhole)
     and native bit_count verification."""
-    # Materialize the slim signature table once: the band self-join reads
-    # it from both sides and would otherwise run the 60-sum aggregation
+    # Materialize the slim signature table once: ``key_pairs`` reads it
+    # from both sides and would otherwise run the 60-sum aggregation
     # twice over the full corpus.
     sigs = _simhash_sig(_docs(spark, sf_dir)).localCheckpoint(eager=True)
     bands = sigs.select(
         "doc_id", "simhash",
         F.explode(_simhash_band_keys()).alias("band"),
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"),
-                ham.cast("int").alias("hamming"))
-        .dropDuplicates(["a_id", "b_id"])
+        key_pairs(bands, "band")
+        .select("a_id", "b_id", ham.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= _HAMMING_MAX)
         .orderBy("a_id", "b_id")
     )
@@ -704,15 +665,14 @@ def containment_pairs(spark, sf_dir):
 
     Shares ``_capped_pair_intersections`` (and its ``_PAIR_CTE`` SQL
     twin) with ngram_jaccard_pairs — inverted shingle index, stop-
-    shingle cap before the self-join, pair aggregate; only the
-    coefficient differs, so the scale argument is the one already made
-    there."""
+    shingle cap, ``key_pairs``; only the coefficient differs, so the
+    scale argument is the one already made there."""
     pairs = _capped_pair_intersections(_docs(spark, sf_dir))
-    ov = F.col("inter") / F.least("na", "nb")
+    ov = F.col("shared") / F.least("n_a", "n_b")
     return (
         pairs.withColumn("overlap", F.round(ov, 6))
         .filter(ov >= OVERLAP_THRESHOLD)
-        .select("a_id", "b_id", "inter", "overlap")
+        .select("a_id", "b_id", F.col("shared").alias("inter"), "overlap")
         .orderBy("a_id", "b_id")
     )
 
@@ -803,30 +763,25 @@ def minhash_est_pairs_df(docs: DataFrame) -> DataFrame:
     exact binary fraction — no rounding, no float-order concern; the
     only float op is the final division on both engines.
 
-    Candidates come from ``_capped_pair_intersections`` (the shared
-    inverted-index pair engine) rather than blake2b band keys so the
+    Candidates come from ``_capped_pair_intersections`` (``key_pairs``
+    over the capped shingle index) rather than blake2b band keys so the
     oracle can reproduce them; composing with banded candidates is
     exactly ``minhash_lsh_pairs``'s front half. Scale shape: the
-    signature build is explode(shingles) × broadcast(128 perm rows) →
-    map-side-combined min per (doc, i) — the shuffle carries ≤128 rows
-    per doc per partition; the slim (doc_id, sig[128]) table is
-    checkpointed once and joined twice."""
+    signature build is one map-side-combined aggregation
+    (``_est_signatures_df``); the slim (doc_id, sig[128]) table is
+    checkpointed once and attached to both members by ``pair_sides``."""
     sigarr = _est_signatures_df(docs).localCheckpoint(eager=True)
     pairs = _capped_pair_intersections(docs)
     matches = F.size(F.filter(
-        F.zip_with("sa", "sb", lambda x, y: x == y), lambda m: m))
-    return (pairs
-            .join(sigarr.select(F.col("doc_id").alias("a_id"),
-                                F.col("sig").alias("sa")), "a_id")
-            .join(sigarr.select(F.col("doc_id").alias("b_id"),
-                                F.col("sig").alias("sb")), "b_id")
+        F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
+    return (pair_sides(pairs, sigarr, "sig")
             .withColumn("est_jaccard",
                         matches.cast("double") / EST_N_PERM)
             .filter(F.col("est_jaccard") >= EST_THRESHOLD)
             .withColumn("jaccard",
-                        F.round(F.col("inter")
-                                / (F.col("na") + F.col("nb")
-                                   - F.col("inter")), 6))
+                        F.round(F.col("shared")
+                                / (F.col("n_a") + F.col("n_b")
+                                   - F.col("shared")), 6))
             .select("a_id", "b_id", "est_jaccard", "jaccard")
             .orderBy("a_id", "b_id"))
 
@@ -907,31 +862,23 @@ assert _TAU_NUM / _TAU_DEN == EST_THRESHOLD
 
 def dedup_pr_eval_df(docs: DataFrame) -> DataFrame:
     # truth must be the EXACT full-universe Jaccard: the signatures are
-    # built over ALL shingles, while the capped pair engine's `inter`
+    # built over ALL shingles, while _capped_pair_intersections' `shared`
     # drops hot shingles — labeling truth with capped-inter/full-union
     # would understate J for boilerplate-sharing pairs and bias the
-    # confusion matrix the eval exists to report. So the bounded
-    # candidate set re-attaches full shingle arrays and intersects them
-    # exactly (the minhash_lsh_pairs verify shape); only candidate
-    # GENERATION keeps the cap (pairs sharing nothing but boilerplate
-    # are not candidates — same as production).
+    # confusion matrix the eval exists to report. So ``pair_sides``
+    # attaches full shingle arrays (and signatures) to the bounded
+    # candidate set, intersected exactly (the minhash_lsh_pairs verify
+    # shape); only candidate GENERATION keeps the cap (pairs sharing
+    # nothing but boilerplate are not candidates — same as production).
     shf = _with_shingles(docs).select("doc_id", "shingles")
     sigarr = _est_signatures_df(docs).localCheckpoint(eager=True)
     cand_ids = (_capped_pair_intersections(docs)
                 .select("a_id", "b_id").localCheckpoint(eager=True))
     matches = F.size(F.filter(
-        F.zip_with("sa", "sb", lambda x, y: x == y), lambda m: m))
-    inter = F.size(F.array_intersect("sha", "shb"))
-    union = F.size("sha") + F.size("shb") - inter
-    sc = (cand_ids
-          .join(shf.select(F.col("doc_id").alias("a_id"),
-                           F.col("shingles").alias("sha")), "a_id")
-          .join(shf.select(F.col("doc_id").alias("b_id"),
-                           F.col("shingles").alias("shb")), "b_id")
-          .join(sigarr.select(F.col("doc_id").alias("a_id"),
-                              F.col("sig").alias("sa")), "a_id")
-          .join(sigarr.select(F.col("doc_id").alias("b_id"),
-                              F.col("sig").alias("sb")), "b_id")
+        F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    union = F.size("shingles_a") + F.size("shingles_b") - inter
+    sc = (pair_sides(pair_sides(cand_ids, shf, "shingles"), sigarr, "sig")
           .select(inter.alias("inter"), union.alias("un"),
                   matches.alias("m")))
     est_pos = F.col("m") >= _EST_MIN_MATCHES
@@ -1244,31 +1191,25 @@ def prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the df table is vocabulary-sized (NO broadcast hint —
     the tfidf lesson; AQE may still choose broadcast when small), the
-    per-doc rarity window carries |shingles| rows per doc, and the
-    candidate equi-join touches only prefix tokens — which are the
-    RAREST by construction, so the hot-shingle fan-out that forces the
-    df-cap elsewhere cannot happen here. Verification joins the bounded
-    candidate set back to the shingle arrays (O(cand * s) map work)."""
+    per-doc rarity window carries |shingles| rows per doc, and
+    ``key_pairs`` over the prefix tokens touches only the RAREST tokens
+    by construction, so the hot-shingle fan-out that forces the df-cap
+    elsewhere cannot happen here. Verification attaches the shingle
+    arrays to the bounded candidate set with ``pair_sides`` (O(cand * s)
+    map work)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = _with_shingles(docs).select("doc_id", "shingles").persist()
-    # the prefix table feeds BOTH sides of the candidate self-join: an
+    # the prefix table feeds BOTH sides of ``key_pairs``: an
     # unpersisted frame would run the explode + df-count + rarity window
     # twice (the re-execution trap — pushed-projection diffs defeat
     # ReusedExchange)
     pref = _prefix_tokens_df(sh).persist()
     try:
-        cand = (pref.select(F.col("doc_id").alias("a"), "sh")
-                .join(pref.select(F.col("doc_id").alias("b"), "sh"), "sh")
-                .filter(F.col("a") < F.col("b"))
-                .select("a", "b").distinct())
-        sa = sh.select(F.col("doc_id").alias("a"),
-                       F.col("shingles").alias("sha"))
-        sb = sh.select(F.col("doc_id").alias("b"),
-                       F.col("shingles").alias("shb"))
-        inter = F.size(F.array_intersect("sha", "shb"))
-        out = (cand.join(sa, "a").join(sb, "b")
-               .select("a", "b", inter.alias("inter_size"),
-                       (F.size("sha") + F.size("shb") - inter)
+        inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+        out = (pair_sides(key_pairs(pref, "sh"), sh, "shingles")
+               .select(F.col("a_id").alias("a"), F.col("b_id").alias("b"),
+                       inter.alias("inter_size"),
+                       (F.size("shingles_a") + F.size("shingles_b") - inter)
                        .alias("union_size"))
                .filter(F.col("inter_size") * PFX_DEN
                        >= F.col("union_size") * PFX_NUM)

@@ -41,6 +41,10 @@ _N_CELLS = 16
 _IVF_PROBES = 2
 # Refuse brute-force beyond this many vectors (pointer to the LSH/IVF path).
 MAX_BRUTE_ROWS = 10_000_000
+# Refuse embedding_neardup_lsh when its probe-key join can emit more pair
+# rows than this: the lazy pair checkpoint's budget, the 2×10^8 rows
+# (~5.6 GB) stated at dedup.MAX_EXACT_PAIR_ROWS.
+MAX_LSH_PAIR_ROWS = 200_000_000
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,17 +206,18 @@ def embedding_neardup_lsh(spark, sf_dir):
     the O(n²) pair space.
 
     r6 restructure (guide §8: decide with small rows, move heavy rows
-    once): the band self-join now carries only (vec_id, probe) — not the
-    64-double payload — and pair ids are DEDUPLICATED before any cosine
+    once): the probe pairs (``key_pairs``) carry only (vec_id, probe) —
+    not the 64-double payload — and are DEDUPLICATED before any cosine
     is computed (multiprobe collides each near pair ~2× on average:
-    662k collision rows → 299k unique pairs at sf0.1). Embeddings are
-    re-attached to the unique pairs with per-vector norms computed once
-    on the side frame, the dot is the unrolled codegen fold
+    662k collision rows → 299k unique pairs at sf0.1). ``pair_sides``
+    attaches embeddings and per-vector norms (computed once on the side
+    frame) to the unique pairs, the dot is the unrolled codegen fold
     (bit-identical — operators.fold_dot), and the slim scored frame is
-    lazily checkpointed so the threshold filter cannot re-evaluate it.
-    Same rows out (a pair's cosine is the same wherever computed);
-    measured 12.8 s → ~2 s at sf0.1."""
-    from . import fold_dot, fold_sq
+    lazily checkpointed so the threshold filter cannot re-evaluate it;
+    the probe-key join's row count is bounded first and refused above
+    ``MAX_LSH_PAIR_ROWS``. Same rows out (a pair's cosine is the same
+    wherever computed); measured 12.8 s → ~2 s at sf0.1."""
+    from . import fold_dot, fold_sq, key_pairs, pair_sides
 
     emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("emb")))
     # multiprobe: each vector lands in its bucket plus the 8 single-bit
@@ -221,28 +226,22 @@ def embedding_neardup_lsh(spark, sf_dir):
         F.col("bucket"), *[
             F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)
         ])
-    banded = emb.select("vec_id", F.explode(probes).alias("b"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pair_ids = (
-        a.join(b, (F.col("a.b") == F.col("b.b"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("a_id"),
-                F.col("b.vec_id").alias("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    banded = emb.select("vec_id", F.explode(probes).alias("probe"))
+    # a vector's 9 probes are distinct, so the join emits exactly
+    # Σ n_k(n_k−1)/2 rows over the ≤ 2^8 probe keys
+    bound = sum(r["count"] * (r["count"] - 1) // 2
+                for r in banded.groupBy("probe").count().collect())
+    if bound > MAX_LSH_PAIR_ROWS:
+        raise ValueError(
+            f"embedding_neardup_lsh: the probe-key join would emit {bound} "
+            f"pair rows (> {MAX_LSH_PAIR_ROWS}), past the pair "
+            f"checkpoint's storage budget.")
     side = emb.select("vec_id", "emb").withColumn(
         "nrm", F.sqrt(fold_sq(F.col("emb"), _DIM)))
-    cands = (
-        pair_ids
-        .join(side.select(F.col("vec_id").alias("a_id"),
-                          F.col("emb").alias("ea"),
-                          F.col("nrm").alias("na")), "a_id")
-        .join(side.select(F.col("vec_id").alias("b_id"),
-                          F.col("emb").alias("eb"),
-                          F.col("nrm").alias("nb")), "b_id")
-    )
-    c = fold_dot(F.col("ea"), F.col("eb"), _DIM) / (F.col("na") * F.col("nb"))
+    cands = pair_sides(key_pairs(banded, "probe", id_col="vec_id"),
+                       side, "emb", "nrm", id_col="vec_id")
+    c = (fold_dot(F.col("emb_a"), F.col("emb_b"), _DIM)
+         / (F.col("nrm_a") * F.col("nrm_b")))
     slim = cands.select("a_id", "b_id", c.alias("cosine")) \
                 .localCheckpoint(eager=False)
     return (
@@ -833,6 +832,26 @@ def _trunc_div(s: int, n: int) -> int:
     return s // n if s >= 0 else -((-s) // n)
 
 
+def _nearest_codeword(col, codebook: list[list[int]]):
+    """``struct(d, cid)`` of the ``codebook`` row nearest to the integer
+    array column ``col``: exact BIGINT d² folded from a 0 seed in
+    dimension order, ties → lowest cid (``array_min`` over the structs).
+    The one literal-codebook scorer of k-means assignment and PQ encode."""
+    # NOTE(r6): HOF folds kept — K codewords of unrolled distance chains
+    # bloat the plan (k-means measured slower, ann_topk_pq 3× slower).
+    structs = []
+    for cid, c in enumerate(codebook):
+        lit = F.array(*[F.lit(v).cast("long") for v in c])
+        d2 = F.aggregate(
+            F.zip_with(col, lit, lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("long"), lambda acc, x: acc + x)
+        # named_struct: .alias inside F.struct does not survive
+        # complex (higher-order-function) children in Spark 4
+        structs.append(F.named_struct(
+            F.lit("d"), d2, F.lit("cid"), F.lit(cid)))
+    return F.array_min(F.array(*structs))
+
+
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained k-means (Lloyd's algorithm, K=8, 2 iterations) over the
     embeddings table — the real version of the seeded-random centroids the
@@ -865,23 +884,9 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                  for r in qv.orderBy("vec_id").limit(_KMEANS_K).collect()]
         dim = len(cents[0])
 
-        def best_of(centroids):
-            # NOTE(r6): HOF folds kept — K centroids × iterations of
-            # unrolled 64-term chains bloat the plan (measured slower).
-            structs = []
-            for cid, c in enumerate(centroids):
-                lit = F.array(*[F.lit(v).cast("long") for v in c])
-                d2 = F.aggregate(
-                    F.zip_with("q", lit, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"), lambda acc, x: acc + x)
-                # named_struct: .alias inside F.struct does not survive
-                # complex (higher-order-function) children in Spark 4
-                structs.append(F.named_struct(
-                    F.lit("d"), d2, F.lit("cid"), F.lit(cid)))
-            return F.array_min(F.array(*structs))
-
         for _ in range(_KMEANS_ITERS - 1):
-            sums = (qv.select(best_of(cents)["cid"].alias("cid"),
+            sums = (qv.select(_nearest_codeword("q", cents)["cid"]
+                              .alias("cid"),
                               F.posexplode("q").alias("dim", "v"))
                     .groupBy("cid", "dim")
                     .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
@@ -892,7 +897,8 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _trunc_div(int(r["s"]), int(r["n"]))
             cents = [newc.get(i, cents[i]) for i in range(_KMEANS_K)]
 
-        return qv.select("vec_id", best_of(cents).alias("b")).select(
+        return qv.select("vec_id",
+                         _nearest_codeword("q", cents).alias("b")).select(
             "vec_id", F.col("b.cid").alias("cluster"),
             F.col("b.d").alias("dist2")).orderBy("vec_id")
     finally:
@@ -1852,27 +1858,16 @@ def _pq_codebooks(qv: DataFrame) -> list[list[list[int]]]:
 
 
 def _pq_encode(df: DataFrame, cb: list[list[list[int]]]) -> DataFrame:
-    """Add PQ code columns ``c0..c{M-1}`` (argmin integer subspace d²
-    against the literal codebooks, ties → lowest codeword id) to a frame
-    carrying the quantized vector column ``q``. Map-only."""
+    """Add PQ code columns ``c0..c{M-1}`` (``_nearest_codeword`` of each
+    subvector in its literal codebook) to a frame carrying the quantized
+    vector column ``q``. Map-only."""
     # stage each subvector once (an inline slice inside the K-way argmin
     # would re-slice per codeword — the gopher staged-projection lesson)
     for m in range(_PQ_M):
         df = df.withColumn(f"s{m}",
                            F.slice("q", m * _PQ_SUBDIM + 1, _PQ_SUBDIM))
     for m in range(_PQ_M):
-        # NOTE(r6): HOF folds kept — _PQ_K codewords × _PQ_M unrolled
-        # distance chains bloat the plan (ann_topk_pq measured 3× slower
-        # unrolled); the HOF form stays compact per codeword.
-        structs = []
-        for j in range(_PQ_K):
-            lit = F.array(*[F.lit(v).cast("long") for v in cb[m][j]])
-            d2 = F.aggregate(
-                F.zip_with(f"s{m}", lit, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-            structs.append(F.named_struct(
-                F.lit("d"), d2, F.lit("j"), F.lit(j)))
-        df = df.withColumn(f"c{m}", F.array_min(F.array(*structs))["j"])
+        df = df.withColumn(f"c{m}", _nearest_codeword(f"s{m}", cb[m])["cid"])
     return df.drop(*[f"s{m}" for m in range(_PQ_M)])
 
 
