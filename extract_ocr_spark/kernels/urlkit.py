@@ -65,13 +65,6 @@ def host_allowed(url: str, allow_host_suffixes: tuple[str, ...],
     return False
 
 
-def url_hash_key(url: str, n: int = 12) -> str:
-    """Stable short key: sha256(url)[:n] (reference crawl.py:711-712)."""
-    import hashlib
-
-    return hashlib.sha256((url or "").encode("utf-8")).hexdigest()[:n]
-
-
 def build_absolute_url_list(hrefs, seed_url: str) -> list[str]:
     """Absolutize raw TOC hrefs against the seed URL, normalize, and
     first-seen-dedupe while preserving TOC order (reference parity:

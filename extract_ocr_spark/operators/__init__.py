@@ -38,24 +38,27 @@ def tok_array(col, *, lower: bool = True):
     return F.filter(F.split(c, WS_RE + "+"), lambda x: x != F.lit(""))
 
 
-def bigram_array(toks):
-    """Adjacent-token bigrams (space-joined) of a token array; empty
-    array for <2 tokens. The ONE definition shared by every bigram
-    operator (kmv_distinct, dsir_weights) so their oracle twins —
-    ``toks[i] || ' ' || toks[i+1]`` over ``unnest(range(1, len(toks)))``
-    — can never drift against a second hand-rolled Spark variant.
+def word_ngrams(df, toks: str, n: int, out: str):
+    """``df`` plus column ``out``: the word n-grams of the token array
+    column ``toks`` — adjacent tokens, space-joined, in token order, no
+    dedup; ``[]`` for fewer than n tokens or a null array. The ONE word
+    n-gram builder (shingles, bigrams, positional k-grams), so the
+    oracle twins — ``toks[i] || ' ' || ... || toks[i+n-1]`` over
+    ``range(1, len(toks) - n + 2)`` — can never drift against a second
+    hand-rolled Spark variant.
 
-    The <2 guard is load-bearing: sequence(0, size-2) DESCENDS for a
-    1-token array and slice(toks, 0, 2) then throws (the
-    repetition_metrics lesson); CASE WHEN evaluates lazily per row, so
-    the guarded branch never runs for short docs."""
+    It is ``pyspark.ml.feature.NGram``: a JVM Transformer (no Python
+    worker, no interpreted lambda per element), which is why it takes a
+    frame. NGram throws NullPointerException on a null array, so
+    ``toks`` is coalesced to ``array()`` first. Works on a streaming
+    frame too (the transform is one ``withColumn``)."""
+    from pyspark.ml.feature import NGram
     from pyspark.sql import functions as F
 
-    return F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.array_join(F.slice(toks, i + 1, 2), " ")),
-    ).otherwise(F.expr("array()").cast("array<string>"))
+    tmp = f"_{out}_toks"
+    safe = df.withColumn(
+        tmp, F.coalesce(F.col(toks), F.array().cast("array<string>")))
+    return NGram(n=n, inputCol=tmp, outputCol=out).transform(safe).drop(tmp)
 
 
 def md5_long(col):

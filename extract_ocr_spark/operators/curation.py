@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import (WS_CHARS, WS_RE, bigram_array, md5_long, pair_sides,
-               spread_input, tok_array)
+from . import (WS_CHARS, WS_RE, md5_long, pair_sides, spread_input,
+               tok_array, word_ngrams)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -805,12 +805,10 @@ def dsir_weights_df(docs: DataFrame, target_lang: str = DSIR_TARGET_LANG,
     # ONE scan + ONE explode: unigrams and bigrams concatenate into a
     # single feature array before exploding (a union of two selects
     # would re-read and re-tokenize the corpus per branch)
-    toks = docs.select(
-        "doc_id", "lang", tok_array(F.col("text")).alias("w"))
+    toks = word_ngrams(docs.select(
+        "doc_id", "lang", tok_array(F.col("text")).alias("w")), "w", 2, "bg")
     feats = toks.select(
-        "doc_id", "lang",
-        F.explode(F.concat(F.col("w"), bigram_array(F.col("w"))))
-        .alias("f"))
+        "doc_id", "lang", F.explode(F.concat("w", "bg")).alias("f"))
     occ = (feats
            .select("doc_id", "lang",
                    (md5_long(F.col("f")) % buckets).alias("b"))

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import (WS_RE, fold_dot, fold_sq, iterate, key_pairs, md5_long,
-               pair_sides, spread_input)
+               pair_sides, spread_input, word_ngrams)
 
 from ..kernels.dedupkit import lsh_bands, minhash_signature
 
@@ -80,17 +80,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _with_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """Native (JVM-side) word k-shingling: lowercase, strip non-alnum,
-    split, sliding window via transform(sequence), distinct."""
+    split, keep docs with >= k words, then the distinct k-grams of the
+    shared ``word_ngrams`` builder."""
     words = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")), " ")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - k),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
-        )
-    )
-    return docs.withColumn("_words", words).filter(F.size("_words") >= k) \
-               .withColumn("shingles", shingles).drop("_words")
+    kept = docs.withColumn("_words", words).filter(F.size("_words") >= k)
+    return (word_ngrams(kept, "_words", k, "shingles")
+            .withColumn("shingles", F.array_distinct("shingles"))
+            .drop("_words"))
 
 
 def _drop_hot_shingles(inv: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
@@ -562,15 +559,8 @@ def dup_ngram_spans(spark, sf_dir):
     words = F.split(F.trim(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")), " ")
     k = DUP_GRAM_K
-    grams = (
-        docs.withColumn("_w", words).filter(F.size("_w") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(F.transform(
-                F.sequence(F.lit(0), F.size("_w") - k),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, k)),
-            )).alias("pos", "gram"))
-    )
+    grams = word_ngrams(docs.withColumn("_w", words), "_w", k, "_g").select(
+        "doc_id", F.posexplode("_g").alias("pos", "gram"))
     dup_grams = (
         grams.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -1286,7 +1276,10 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     old x old pair space, which is what makes incremental dedup
     O(batch) instead of O(corpus^2). The effective-text frame is
     persisted: it feeds both channels (the re-execution trap
-    otherwise)."""
+    otherwise). The inverted index is persisted AND materialized before
+    use: the hot-shingle aggregate and the anti-join both read it, and
+    their stages are submitted together, so a lazy persist would still
+    let both shingle the corpus."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
     repl = docs.select((F.col("doc_id") - 1).alias("doc_id"),
@@ -1298,17 +1291,17 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("text"),
                    (F.col("doc_id") % INC_NEW_MOD == 0).alias("is_new"))
            .persist())
+    inv = _with_shingles(eff).select(
+        "doc_id", "is_new", F.size("shingles").alias("s"),
+        F.explode("shingles").alias("shingle")).persist()
     try:
+        inv.count()
         news = eff.filter(F.col("is_new")).select("doc_id", "text")
         olds = eff.filter(~F.col("is_new")).select("doc_id", "text")
         ex = (news.select("doc_id", F.md5("text").alias("h"))
               .join(olds.select(F.col("doc_id").alias("o"),
                                 F.md5("text").alias("h")), "h")
               .groupBy("doc_id").agg(F.min("o").alias("ex_match")))
-        sh = _with_shingles(eff).select("doc_id", "is_new", "shingles")
-        inv = sh.select("doc_id", "is_new",
-                        F.size("shingles").alias("s"),
-                        F.explode("shingles").alias("shingle"))
         inv2 = _drop_hot_shingles(inv)
         n_side = inv2.filter(F.col("is_new")).select(
             F.col("doc_id").alias("new_id"), F.col("s").alias("sn"),
@@ -1344,6 +1337,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .orderBy("doc_id")
                .localCheckpoint(eager=True))
     finally:
+        inv.unpersist()
         eff.unpersist()
     return out
 

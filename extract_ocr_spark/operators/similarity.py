@@ -810,7 +810,8 @@ def _quantize_expr(col):
     """The ONE engine-invariant embedding quantizer (q = floor(x*scale
     + 0.5) computed in DOUBLE, then BIGINT) shared by kmeans_clusters
     and pca_top_component — a second hand-rolled copy is exactly the
-    lockstep-edit drift bigram_array exists to prevent."""
+    lockstep-edit drift a single shared builder (like word_ngrams)
+    exists to prevent."""
     return F.transform(
         col, lambda x: F.floor(x.cast("double") * F.lit(float(_KMEANS_SCALE))
                                + F.lit(0.5)).cast("long"))

@@ -14,7 +14,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels.textstats import fingerprint, lang_id
-from . import spread_input, PY_WS_RE, WS_CHARS, WS_RE, md5_long, tok_array
+from . import (spread_input, PY_WS_RE, WS_CHARS, WS_RE, md5_long, tok_array,
+               word_ngrams)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,18 +302,10 @@ def repetition_metrics_df(docs: DataFrame) -> DataFrame:
     words = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), WS_RE + "+", " ")),
         " ")
-    # size >= 2 guard BEFORE sequence(): with one word sequence(0, -1)
-    # descends and slice(words, 0, 2) throws; sub-2-word docs simply have
-    # no 2-grams and fall out via the left join (frac coalesced to 0)
-    grams = (
-        docs.withColumn("_w", words).filter(F.size("_w") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.transform(
-                F.sequence(F.lit(0), F.size("_w") - 2),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, 2)),
-            )).alias("gram"))
-    )
+    # sub-2-word docs have no 2-grams and fall out via the left join
+    # (frac coalesced to 0)
+    grams = word_ngrams(docs.withColumn("_w", words), "_w", 2, "_g").select(
+        "doc_id", F.explode("_g").alias("gram"))
     gram_stats = (
         grams.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
         .groupBy("doc_id").agg(
@@ -396,17 +389,13 @@ def lm_nll_scores_df(docs: DataFrame) -> DataFrame:
     words_col = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " ")),
         " ")
-    tokens = docs.select("doc_id", words_col.alias("w")) \
-        .filter(F.size("w") >= 2)
-    bigrams = tokens.select(
-        "doc_id",
-        F.explode(F.transform(
-            F.sequence(F.lit(0), F.size("w") - 2),
-            lambda i: F.struct(
-                F.element_at("w", i + 1).alias("w1"),
-                F.element_at("w", i + 2).alias("w2")),
-        )).alias("bg")
-    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    # tokens hold no spaces (non-alnum runs became the separator), so
+    # each bigram splits back into (w1, w2) on its one space
+    bg = F.split("bg", " ")
+    bigrams = word_ngrams(
+        docs.select("doc_id", words_col.alias("w")), "w", 2, "bgs").select(
+        "doc_id", F.explode("bgs").alias("bg")).select(
+        "doc_id", bg.getItem(0).alias("w1"), bg.getItem(1).alias("w2"))
 
     # Pre-aggregate to per-doc bigram COUNTS first: the corpus-level c2
     # is a rollup of occ (one shuffle stage shorter than re-counting raw
@@ -720,21 +709,10 @@ def winnow_fingerprints_df(docs: "DataFrame") -> "DataFrame":
     refined to sub-document granularity for overlap detection."""
     from pyspark.sql.window import Window
 
-    from . import tok_array
-
-    base = (docs.select("doc_id", tok_array(F.col("text")).alias("toks"))
-            .withColumn("n", F.size("toks")))
-    # guard: sequence(0, n-K) descends when n < K — filter first
-    grams = (base.filter(F.col("n") >= WIN_K)
-             .select("doc_id",
-                     (F.col("n") - WIN_K + 1).alias("n_grams"),
-                     F.posexplode(F.transform(
-                         F.sequence(F.lit(0), F.col("n") - WIN_K),
-                         lambda i: F.array_join(
-                             F.slice("toks", i + 1, WIN_K), " "))
-                     ).alias("pos", "gram")))
-    from . import md5_long
-
+    toks = docs.select("doc_id", tok_array(F.col("text")).alias("toks"))
+    grams = word_ngrams(toks, "toks", WIN_K, "_g").select(
+        "doc_id", F.size("_g").alias("n_grams"),
+        F.posexplode("_g").alias("pos", "gram"))
     h = grams.withColumn("fp", md5_long(F.col("gram")))
     wspec = (Window.partitionBy("doc_id").orderBy("pos")
              .rowsBetween(0, WIN_W - 1))
@@ -894,13 +872,9 @@ def kmv_distinct_df(docs: "DataFrame") -> "DataFrame":
     """
     from pyspark.sql.window import Window
 
-    from . import bigram_array, md5_long
-
-    base = (docs.select("source", tok_array(F.col("text")).alias("toks"))
-            .filter(F.size("toks") >= 2))
-    grams = base.select(
-        "source",
-        F.explode(bigram_array(F.col("toks"))).alias("bg")).distinct()
+    toks = docs.select("source", tok_array(F.col("text")).alias("toks"))
+    grams = word_ngrams(toks, "toks", 2, "_bg").select(
+        "source", F.explode("_bg").alias("bg")).distinct()
     h = grams.select("source", "bg", md5_long(F.col("bg")).alias("h"))
     w = Window.partitionBy("source").orderBy("h", "bg")
     r = h.withColumn("rn", F.row_number().over(w))
@@ -1240,9 +1214,9 @@ def inverted_index_df(docs: DataFrame) -> DataFrame:
     list) for phrases with IDX_DF_MIN <= df <= IDX_DF_CAP — the
     retrieval artifact behind bm25_search (which scores on the fly) and
     the shape an index-shard export job writes at corpus scale. Bigrams
-    (the shared ``bigram_array``) rather than unigrams: phrase postings
-    are what positional/phrase retrieval shards, and their df spectrum
-    has the long tail an index cap is designed for.
+    (the shared ``word_ngrams`` builder, n=2) rather than unigrams:
+    phrase postings are what positional/phrase retrieval shards, and
+    their df spectrum has the long tail an index cap is designed for.
 
     Scale shape: two phases on purpose. Phase 1 computes df alone
     (count aggregate — partial map-side combine, tiny rows); the cap
@@ -1254,8 +1228,6 @@ def inverted_index_df(docs: DataFrame) -> DataFrame:
     scale — the join is left to AQE (broadcasts while small), the
     tfidf_top_terms lesson. Postings sort numerically, then render as a
     string so both engines hash one canonical form."""
-    from . import bigram_array
-
     # r6: one explicit term-keyed exchange feeds BOTH phases. The naive
     # two-reference form computed the tokenize→bigram→explode chain and
     # scanned the source twice (the df side partial-aggregated before
@@ -1267,10 +1239,10 @@ def inverted_index_df(docs: DataFrame) -> DataFrame:
     # with the registry wrapper's spread_input). The phase order is
     # unchanged: df prunes hot phrases before any posting list is
     # collected.
-    pairs = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(bigram_array(tok_array(F.col("text")))))
-        .alias("term")).repartition("term")
+    toks = docs.select("doc_id", tok_array(F.col("text")).alias("toks"))
+    pairs = word_ngrams(toks, "toks", 2, "_bg").select(
+        "doc_id", F.explode(F.array_distinct("_bg")).alias("term")
+    ).repartition("term")
     df_tab = (pairs.groupBy("term").agg(F.count("*").alias("df"))
               .filter((F.col("df") >= IDX_DF_MIN)
                       & (F.col("df") <= IDX_DF_CAP)))
@@ -1341,10 +1313,9 @@ def pmi_collocations_df(docs: DataFrame) -> DataFrame:
     broadcast hint (vocabulary-sized — Heaps' law, the tfidf lesson;
     AQE broadcasts while small); N is a broadcast single row. The
     global top-K is TakeOrdered — per-partition heaps, no full sort."""
-    from . import bigram_array, tok_array
-
-    c2 = (docs.select(F.explode(bigram_array(tok_array(F.col("text"))))
-                      .alias("bg"))
+    toks = docs.select(tok_array(F.col("text")).alias("toks"))
+    c2 = (word_ngrams(toks, "toks", 2, "_bg")
+          .select(F.explode("_bg").alias("bg"))
           .groupBy("bg").agg(F.count("*").alias("c2"))
           .select(F.split("bg", " ").getItem(0).alias("w1"),
                   F.split("bg", " ").getItem(1).alias("w2"),
@@ -1562,13 +1533,9 @@ def hll_rank_rows(docs: "DataFrame", *, dedup: bool = True) -> "DataFrame":
     insensitive, and a streaming DataFrame cannot host the blocking
     distinct anyway (the batch path keeps it because one row per distinct
     gram also yields exact_distinct for free)."""
-    from . import bigram_array, md5_long
-
-    base = (docs.select("source", tok_array(F.col("text")).alias("toks"))
-            .filter(F.size("toks") >= 2))
-    grams = base.select(
-        "source",
-        F.explode(bigram_array(F.col("toks"))).alias("bg"))
+    toks = docs.select("source", tok_array(F.col("text")).alias("toks"))
+    grams = word_ngrams(toks, "toks", 2, "_bg").select(
+        "source", F.explode("_bg").alias("bg"))
     if dedup:
         grams = grams.distinct()
     h = grams.select("source", md5_long(F.col("bg")).alias("h"))
@@ -2958,11 +2925,9 @@ ORACLES["chi2_drift"] = CHI2_DRIFT_SQL
 def self_bleu_df(docs: DataFrame, *, _checkpoint: bool = True) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from . import bigram_array
-
-    c = (docs.select("doc_id", tok_array(F.col("text")).alias("toks"))
-         .filter(F.size("toks") >= 2)
-         .select("doc_id", F.explode(bigram_array(F.col("toks"))).alias("bg"))
+    toks = docs.select("doc_id", tok_array(F.col("text")).alias("toks"))
+    c = (word_ngrams(toks, "toks", 2, "_bg")
+         .select("doc_id", F.explode("_bg").alias("bg"))
          .groupBy("doc_id", "bg").agg(F.count("*").alias("c")))
     c.persist()  # feeds the top-2 window AND the clip join
     try:

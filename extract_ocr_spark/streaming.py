@@ -7,8 +7,8 @@ same ``mapInPandas`` extraction kernel, and appended to the output with
 exactly-once semantics via the streaming checkpoint — the streaming
 analogue of the lineage anti-join resume.
 
-Also provides a windowed event aggregation with watermarking (late-data
-handling), the streaming analogue of ``relational.windowed_event_counts``.
+Also provides watermarked streaming operators over the event stream
+(stateful sessionization, funnels, sketches, interval joins).
 """
 
 from __future__ import annotations
@@ -56,24 +56,6 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_windowed_event_counts(spark: SparkSession, input_dir: str,
-                                 *, watermark: str = "1 hour",
-                                 window: str = "1 hour") -> DataFrame:
-    """Tumbling-window event counts with late-data watermarking. Returns
-    the streaming DataFrame (caller attaches a sink). Batch-equivalent:
-    relational.windowed_event_counts — same grouping semantics."""
-    events = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"),
-             (F.sum(F.round(F.col("value") * 100, 0).cast("long")) / 100.0)
-             .alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n",
-                "sum_value")
-    )
 
 
 def stream_dedup_extract(spark: SparkSession, input_dir: str,

@@ -757,19 +757,15 @@ def test_large_orders_aggregates_before_join(spark):
 def test_prefix_filter_pairs_pins(spark):
     """Candidates must come from the per-doc rarity window (prefix
     positions) + an equi join — never a cartesian. Pins the PRODUCTION
-    prefix stage (_prefix_tokens_df), pre-persist/checkpoint."""
-    from pyspark.sql import functions as F
-
+    candidate stage (key_pairs over _prefix_tokens_df),
+    pre-persist/checkpoint."""
+    from extract_ocr_spark.operators import key_pairs
     from extract_ocr_spark.operators.dedup import (_prefix_tokens_df,
                                                    _with_shingles)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sh = _with_shingles(docs).select("doc_id", "shingles")
-    pref = _prefix_tokens_df(sh)
-    cand = (pref.select(F.col("doc_id").alias("a"), "sh")
-            .join(pref.select(F.col("doc_id").alias("b"), "sh"), "sh")
-            .filter(F.col("a") < F.col("b")).select("a", "b").distinct())
-    plan = _plan(cand)
+    plan = _plan(key_pairs(_prefix_tokens_df(sh), "sh"))
     assert "CartesianProduct" not in plan, plan
     assert "Window" in plan, plan
     for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
