@@ -20,6 +20,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench_scaling import _stat, _steal_fraction  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -127,10 +129,6 @@ def sweep_registry():
 
     from extract_ocr_spark.session import get_spark
 
-    def stat():
-        with open("/proc/stat") as f:
-            return [int(x) for x in f.readline().split()[1:]]
-
     spark = get_spark(f"local[{CPUS}]", app_name="bench_extra_sweep",
                       shuffle_partitions=max(8, CPUS))
     spark.sparkContext.setLogLevel("ERROR")
@@ -145,12 +143,11 @@ def sweep_registry():
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
             best, steal = 9e9, 1.0
             for _ in range(2):
-                s0 = stat()
+                s0 = _stat()
                 t0 = time.monotonic()
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 w = time.monotonic() - t0
-                s1 = stat()
-                st = (s1[7] - s0[7]) / max(1, sum(s1) - sum(s0))
+                st = _steal_fraction(s0, _stat())
                 if w < best:
                     best, steal = w, st
             results[name] = (round(best, 3), round(steal, 4))

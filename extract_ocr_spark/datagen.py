@@ -213,7 +213,7 @@ def synthetic_flat_documents_df(spark: SparkSession, n_docs: int,
     """Deterministic flat documents(doc_id, text, lang, source, n_chars)
     corpus generated with NATIVE expressions only — no Python in the
     path, so corpus construction itself scales like any other codegen
-    projection (used by the curation endurance bench at 1.2M docs).
+    projection (it built BENCH.md's 1.2M-doc curation endurance corpus).
 
     Each doc is ``min_words + 1 + (id % word_spread)`` words (the
     generating ``F.sequence`` is inclusive on both ends) drawn from the
@@ -240,7 +240,7 @@ def synthetic_flat_documents_df(spark: SparkSession, n_docs: int,
             F.element_at(sources,
                          (F.col("id") % 3 + 1).cast("int")).alias("source"),
         )
-        .withColumn("n_chars", F.length("text"))
+        .withColumn("n_chars", F.length("text").cast("long"))
     )
 
 
@@ -249,9 +249,9 @@ def synthetic_events_df(spark: SparkSession, n_events: int,
                         n_users: int = 0) -> DataFrame:
     """Deterministic events(event_id, ts, user_id, event_type, value,
     props) corpus, native expressions only (no Python in the path) —
-    the big-events input for bench_temporal.py. Shape mirrors the
-    driver's events.parquet: timestamps spread over ~30 days in event_id
-    order (so per-user as-of scans have realistic time locality),
+    the input of the 10M-event temporal numbers in BENCH.md. Shape
+    mirrors the driver's events.parquet: timestamps spread over ~30 days
+    in event_id order (so per-user as-of scans have time locality),
     user_id / event_type / value drawn by xxhash64, value in [0, 490].
     n_users defaults to n_events // 67 (the driver table's ~150 users
     per 10k events)."""

@@ -1303,9 +1303,10 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 F.md5("text").alias("h")), "h")
               .groupBy("doc_id").agg(F.min("o").alias("ex_match")))
         inv2 = _drop_hot_shingles(inv)
-        n_side = inv2.filter(F.col("is_new")).select(
+        # broadcast the batch, not the corpus (size estimates ignore filters)
+        n_side = F.broadcast(inv2.filter(F.col("is_new")).select(
             F.col("doc_id").alias("new_id"), F.col("s").alias("sn"),
-            "shingle")
+            "shingle"))
         o_side = inv2.filter(~F.col("is_new")).select(
             F.col("doc_id").alias("old_id"), F.col("s").alias("so"),
             "shingle")

@@ -281,13 +281,9 @@ def bfs_frontier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..frontier import bfs_frontier
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    n = docs.count()
-    src = F.col("doc_id").cast("string").alias("src")
-    edges = docs.select(
-        src, ((F.col("doc_id") * 2 + 1) % n).cast("string").alias("dst")
-    ).unionByName(docs.select(
-        src, ((F.col("doc_id") * 3 + 7) % n).cast("string").alias("dst")))
+    edges = _mod_edges(spark, sf_dir).select(
+        F.col("src").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"))
     out = bfs_frontier(spark, edges, ["0", "17"],
                        max_depth=3, max_pages=1_000_000_000)
     return out.select(F.col("doc_id").cast("long").alias("doc_id"),
@@ -352,11 +348,7 @@ def pagerank_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     _PR_TELEPORT above); one round(6) at the end."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     n = docs.count()
-    e1 = docs.select(F.col("doc_id").alias("src"),
-                     ((F.col("doc_id") * 2 + 1) % n).alias("dst"))
-    e2 = docs.select(F.col("doc_id").alias("src"),
-                     ((F.col("doc_id") * 3 + 7) % n).alias("dst"))
-    edges = e1.unionByName(e2).distinct()
+    edges = _mod_edges(spark, sf_dir).distinct()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     esrc = edges.join(outdeg, "src")
 
@@ -443,12 +435,7 @@ def hits_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edge table persisted once; each half-iteration localCheckpoints so
     the plan never grows."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    n = docs.count()
-    e1 = docs.select(F.col("doc_id").alias("src"),
-                     ((F.col("doc_id") * 2 + 1) % n).alias("dst"))
-    e2 = docs.select(F.col("doc_id").alias("src"),
-                     ((F.col("doc_id") * 3 + 7) % n).alias("dst"))
-    edges = e1.unionByName(e2).distinct().persist()
+    edges = _mod_edges(spark, sf_dir).distinct().persist()
 
     def _norm(scores: DataFrame) -> DataFrame:
         # pin the half-iteration's join/agg BEFORE deriving the max —
@@ -954,6 +941,18 @@ BRIDGE_MUL = 7      # sparse inter-block bridge: doc_id*7+3 mod n, every 10th
 BRIDGE_ADD = 3
 
 
+def _mod_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed long (src, dst) edges of the synthetic link graph over
+    the documents table: dst = (2·id+1) mod n and (3·id+7) mod n, multi-
+    edges kept (bfs_frontier, pagerank_scores and hits_scores)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    n = docs.count()
+    src = F.col("doc_id").alias("src")
+    return docs.select(src, ((F.col("doc_id") * 2 + 1) % n).alias("dst")) \
+        .unionByName(docs.select(
+            src, ((F.col("doc_id") * 3 + 7) % n).alias("dst")))
+
+
 def _block_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a < b) undirected edge set of a deterministic
     block-community graph over the documents table: chords i->i+1 and
@@ -968,8 +967,8 @@ def _block_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def block_edges_of(docs: DataFrame, n: int) -> DataFrame:
     """The block-community edge construction over any (doc_id) node
-    frame — the one closed form bench_graph.py and the sf_dir queries
-    share."""
+    frame — the one closed form the sf_dir queries share, and the
+    5M-node scale graph in BENCH.md."""
     did = F.col("doc_id")
     same_block = lambda d: F.expr(f"(doc_id + {d}) div {BLOCK}") \
         == F.expr(f"doc_id div {BLOCK}")  # noqa: E731
@@ -1130,7 +1129,7 @@ def label_propagation_df(docs: DataFrame, edges: DataFrame,
                          iters: int = LPA_ITERS) -> DataFrame:
     """The LPA rounds over any (doc_id) node frame + canonical edge
     list, run by ``iterate``; returns the final (v, lbl) table. Shared by
-    the sf_dir query and bench_graph.py."""
+    the sf_dir query and the 5M-node scale graph in BENCH.md."""
     adj = _sym_adj(edges)
 
     def lpa_step(labels):

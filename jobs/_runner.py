@@ -18,7 +18,7 @@ def run_sections(spark, input_dir: str, output: str, table: dict,
     """Write the requested sections (registry queries called verbatim)
     under ``output`` and return the stats dict main() prints. Unknown,
     duplicate, or explicitly-empty selections fail fast before any
-    Spark work (the bench_curation lesson)."""
+    Spark work (a mistyped stage name must not cost a corpus pass)."""
     # None means "all"; an explicitly empty selection is a caller bug
     # (an unset $SECTIONS variable must not silently publish everything)
     names = list(table) if sections is None else sections

@@ -48,8 +48,9 @@ def run(spark, docs, output: str, *, eval_ids=(0, 1, 2, 3, 4),
         chunk_tokens: int | None = None, chunk_stride: int | None = None,
         pack_budget: int = 2048, write_partitions: int | None = None) -> dict:
     """The composed curation pipeline as a callable (spark-submit `main`
-    wraps it; bench_curation.py times it in-process): documents in →
-    partitioned split corpus under ``<output>/corpus`` → stats dict.
+    wraps it; tests/test_curation_graph.py calls it in-process):
+    documents in → partitioned split corpus under ``<output>/corpus`` →
+    stats dict.
 
     Execution shape (the r4 rewrite): every gate becomes a boolean FLAG
     column on one frame instead of a chain of filters — the previous

@@ -837,3 +837,26 @@ def test_split_leakage_check_fixture(spark, tmp_path):
                   "doc_id long, text string, lang string, source string, "
                   "n_chars long")).select("doc_id", "split").collect()}
     assert sp[10] == sp[11]
+
+
+def test_synthetic_flat_documents_df_pinned(spark):
+    """The native scale-corpus generator emits the driver's documents
+    schema and a fixed, partitioning-independent row digest."""
+    from pyspark.sql import functions as F
+
+    from extract_ocr_spark.datagen import synthetic_flat_documents_df
+
+    def digest(df):
+        r = df.agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(F.pmod(F.xxhash64(*df.columns),
+                                F.lit(1_000_000_000))).alias("d")).first()
+        return r["n"], r["d"]
+
+    df = synthetic_flat_documents_df(spark, 200)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("doc_id", "bigint"), ("text", "string"), ("lang", "string"),
+        ("source", "string"), ("n_chars", "bigint")]
+    assert df.count() == 200
+    assert digest(df) == (200, 100960681816)
+    assert digest(synthetic_flat_documents_df(spark, 200, partitions=3)) \
+        == (200, 100960681816)

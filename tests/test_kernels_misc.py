@@ -365,19 +365,41 @@ def test_zipkit_member_pick_and_extract():
     assert "hello zip" in md and "Title" in md
 
 
+def gen_rewrite_corpus(spark, n_pages: int, links_per_page: int,
+                       map_mult: int = 10):
+    """Deterministic synthetic rewrite corpus, generated natively (no
+    driver data): ``n_pages`` markdown pages each carrying
+    ``links_per_page`` absolute links into a url space of
+    ``n_pages * map_mult`` mapped targets."""
+    from pyspark.sql import functions as F
+
+    m = n_pages * map_mult
+    md = F.concat_ws(" ", F.transform(
+        F.sequence(F.lit(1), F.lit(links_per_page)),
+        lambda k: F.format_string(
+            "see [l](https://corpus.example/p/%d.html)",
+            (F.col("id") * 7 + k * 1327) % m),
+    ))
+    pages = spark.range(n_pages).select(
+        F.col("id").alias("doc_id"),
+        F.format_string("https://corpus.example/p/%d.html",
+                        F.col("id")).alias("page_url"),
+        md.alias("md"),
+    )
+    url_map = spark.range(m).select(
+        F.format_string("https://corpus.example/p/%d.html",
+                        F.col("id")).alias("url"),
+        F.format_string("pages/%d.md", F.col("id")).alias("path"),
+    )
+    return pages, url_map
+
+
 def test_rewrite_variants_corpus_scale_parity(spark):
     """Generated-corpus parity between the broadcast-map and explode-join
     rewriters (the fixture parity test above covers edge semantics; this
     covers volume): 30k pages x 10 links against a 300k-row map must
     agree on every page byte-for-byte."""
-    import os
-    import sys
-
     from pyspark.sql import functions as F
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    from bench_rewrite import gen_rewrite_corpus
 
     from extract_ocr_spark.operators.export import (
         rewrite_links_df,

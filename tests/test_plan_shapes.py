@@ -832,6 +832,32 @@ def test_incremental_dedup_capped_no_cartesian(spark):
         assert py not in plan, plan
 
 
+def test_incremental_dedup_broadcasts_batch_side(spark):
+    """The near channel broadcasts the new batch's postings, never the
+    corpus index: no BroadcastExchange of the executed query carries
+    ``old_id``. The result is localCheckpointed, so the executed plan
+    is read from the SQL status store (formatted plan description)."""
+    import re
+
+    from extract_ocr_spark.operators.dedup import incremental_dedup
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    first = max((e.executionId() for e in executions()), default=-1) + 1
+    incremental_dedup(spark, "/root/testdata/sf0.001").collect()
+    inputs = [
+        sec.splitlines()[1]
+        for e in executions() if e.executionId() >= first
+        for sec in re.split(r"\n\(\d+\) ", e.physicalPlanDescription())
+        if sec.startswith("BroadcastExchange")]
+    assert any("new_id" in i for i in inputs), inputs
+    assert not any("old_id" in i for i in inputs), inputs
+
+
 def test_order_priority_counts_semi_join_and_pushdown(spark):
     """The EXISTS must compile to a LEFT SEMI join (one output row per
     order regardless of late-line multiplicity), the quarter filter
