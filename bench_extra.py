@@ -7,7 +7,8 @@ Each probe is labeled via setJobDescription and timed as min-of-3 after
 one warm-up.
 
 Usage: ``python bench_extra.py`` runs the noop probes;
-``python bench_extra.py sweep [query ...]`` times registry queries.
+``python bench_extra.py sweep [query ...]`` times registry queries and
+names each one's costliest stages.
 """
 from __future__ import annotations
 
@@ -21,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench_scaling import _stat, _steal_fraction  # noqa: E402
+from perfbench.harness import (  # noqa: E402
+    _stages, drain_listener, spark_totals)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -121,10 +124,24 @@ def main():
     spark.stop()
 
 
+def top_stages(spark, after_stage: int) -> list[dict]:
+    """The 3 stages newer than stage id ``after_stage`` (a
+    ``spark_totals`` watermark) with the largest executor run time."""
+    drain_listener(spark)
+    new = sorted((st for st in _stages(spark) if st.stageId() > after_stage),
+                 key=lambda st: -st.executorRunTime())
+    return [{"stage": st.stageId(),
+             "run_s": round(st.executorRunTime() / 1e3, 3),
+             "cpu_s": round(st.executorCpuTime() / 1e9, 3),
+             "tasks": st.numTasks(), "name": st.name()}
+            for st in new[:3]]
+
+
 def sweep_registry():
     """Time every registry query at the bench SF (one warm-up + best-of-2,
     steal-recorded). Output: one JSON line per query to stdout — the
-    r6 optimization checklist's measurement source."""
+    r6 optimization checklist's measurement source — with the best
+    repetition's ``top_stages``."""
     import __spark_entry__ as entry
 
     from extract_ocr_spark.session import get_spark
@@ -141,8 +158,9 @@ def sweep_registry():
         spark.sparkContext.setJobDescription(f"sweep:{name}")
         try:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
-            best, steal = 9e9, 1.0
+            best, steal, top = 9e9, 1.0, []
             for _ in range(2):
+                mark = spark_totals(spark)["last_stage"]
                 s0 = _stat()
                 t0 = time.monotonic()
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -150,9 +168,11 @@ def sweep_registry():
                 st = _steal_fraction(s0, _stat())
                 if w < best:
                     best, steal = w, st
+                    top = top_stages(spark, mark)
             results[name] = (round(best, 3), round(steal, 4))
             print(json.dumps({"q": name, "sec": round(best, 3),
-                              "steal": round(steal, 4)}), flush=True)
+                              "steal": round(steal, 4),
+                              "top_stages": top}), flush=True)
         except Exception as exc:  # pragma: no cover - sweep robustness
             results[name] = (None, None)
             print(json.dumps({"q": name, "err": str(exc)[:200]}), flush=True)

@@ -1279,7 +1279,9 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise). The inverted index is persisted AND materialized before
     use: the hot-shingle aggregate and the anti-join both read it, and
     their stages are submitted together, so a lazy persist would still
-    let both shingle the corpus."""
+    let both shingle the corpus. The capped index is materialized too:
+    both near-channel sides read it, and left lazy each side re-ran the
+    hot-shingle aggregate and its shuffle."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
     repl = docs.select((F.col("doc_id") - 1).alias("doc_id"),
@@ -1294,16 +1296,17 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = _with_shingles(eff).select(
         "doc_id", "is_new", F.size("shingles").alias("s"),
         F.explode("shingles").alias("shingle")).persist()
+    inv2 = _drop_hot_shingles(inv).persist()
     try:
         inv.count()
+        inv2.count()
         news = eff.filter(F.col("is_new")).select("doc_id", "text")
         olds = eff.filter(~F.col("is_new")).select("doc_id", "text")
-        ex = (news.select("doc_id", F.md5("text").alias("h"))
+        # broadcast the batch, not the corpus (size estimates ignore filters)
+        ex = (F.broadcast(news.select("doc_id", F.md5("text").alias("h")))
               .join(olds.select(F.col("doc_id").alias("o"),
                                 F.md5("text").alias("h")), "h")
               .groupBy("doc_id").agg(F.min("o").alias("ex_match")))
-        inv2 = _drop_hot_shingles(inv)
-        # broadcast the batch, not the corpus (size estimates ignore filters)
         n_side = F.broadcast(inv2.filter(F.col("is_new")).select(
             F.col("doc_id").alias("new_id"), F.col("s").alias("sn"),
             "shingle"))
@@ -1338,6 +1341,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .orderBy("doc_id")
                .localCheckpoint(eager=True))
     finally:
+        inv2.unpersist()
         inv.unpersist()
         eff.unpersist()
     return out

@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import WS_RE
+from . import WS_RE, _hof_dot, _hof_sq
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -275,16 +275,19 @@ _FOLD_NORM = ("sqrt(list_reduce(list_prepend(0.0, list_transform("
               "{a}, x -> x * x)), (x, y) -> x + y))")
 
 
+# Their column twins: the HOF folds ``fold_dot``/``fold_sq`` fall back to.
+_fold_dot = _hof_dot
+
+
+def _fold_norm(a):
+    return F.sqrt(_hof_sq(a))
+
+
 def _pair_cosine(a, b):
-    # NOTE(r6): HOF folds kept — semdedup's candidate frames are small
-    # and the unrolled form measured slower (see _cosine_to_lit note).
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
+    # NOTE(r6): HOF folds kept — the unrolled form measured slower (see
+    # _cosine_to_lit note). A self-join over one vector set should fold
+    # each norm once per vector instead (semdedup_df's ``nrm``).
+    return _fold_dot(a, b) / (_fold_norm(a) * _fold_norm(b))
 
 
 def _cell_expr(emb_col):
@@ -414,13 +417,14 @@ def semdedup(spark, sf_dir):
 def semdedup_df(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
     """SemDeDup over any (vec_id, emb: array<double>) frame — see
     ``semdedup`` for semantics and the scale argument."""
-    # The slim (vec_id, emb, cell) table is persisted so the parquet scan
-    # and the 16×64-dim centroid fold run ONCE, not once per join side
-    # (the r2 self-join-over-unmaterialized-frame lesson); the result is
+    # The slim (vec_id, emb, cell, nrm) table is persisted so the parquet
+    # scan, the 16×64-dim centroid fold and the norm fold run ONCE per
+    # vector, not once per join side or per pair (the r2
+    # self-join-over-unmaterialized-frame lesson); the result is
     # localCheckpointed eagerly so unpersist below is safe.
-    assigned = emb.withColumn(
-        "cell", _cell_expr(F.col("emb"))).select(
-            "vec_id", "emb", "cell").persist()
+    assigned = emb.select(
+        "vec_id", "emb", _cell_expr(F.col("emb")).alias("cell"),
+        _fold_norm(F.col("emb")).alias("nrm")).persist()
     try:
         n = assigned.count()
         if n > MAX_SEMDEDUP_CELL_ROWS * _N_CELLS:
@@ -432,7 +436,8 @@ def semdedup_df(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
                 f"recipe (re-seed _centroids with more cells) instead.")
         a = assigned.alias("a")
         b = assigned.alias("b")
-        c = _pair_cosine(F.col("a.emb"), F.col("b.emb"))
+        c = (_fold_dot(F.col("a.emb"), F.col("b.emb"))
+             / (F.col("a.nrm") * F.col("b.nrm")))
         pairs = (
             a.join(b, (F.col("a.cell") == F.col("b.cell"))
                    & (F.col("a.vec_id") < F.col("b.vec_id")))
@@ -886,9 +891,12 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim = len(cents[0])
 
         for _ in range(_KMEANS_ITERS - 1):
+            # score in its own projection: beside the posexplode, the
+            # scorer would be evaluated above the Generate, once per
+            # exploded element (dim× per vector)
             sums = (qv.select(_nearest_codeword("q", cents)["cid"]
-                              .alias("cid"),
-                              F.posexplode("q").alias("dim", "v"))
+                              .alias("cid"), "q")
+                    .select("cid", F.posexplode("q").alias("dim", "v"))
                     .groupBy("cid", "dim")
                     .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
                     .collect())  # bounded: K*dim rows

@@ -832,15 +832,11 @@ def test_incremental_dedup_capped_no_cartesian(spark):
         assert py not in plan, plan
 
 
-def test_incremental_dedup_broadcasts_batch_side(spark):
-    """The near channel broadcasts the new batch's postings, never the
-    corpus index: no BroadcastExchange of the executed query carries
-    ``old_id``. The result is localCheckpointed, so the executed plan
-    is read from the SQL status store (formatted plan description)."""
-    import re
-
-    from extract_ocr_spark.operators.dedup import incremental_dedup
-
+def _executed_plans(spark, run) -> list[str]:
+    """Formatted physical plans (``physicalPlanDescription``) of every SQL
+    execution ``run()`` starts, read from the SQL status store — the
+    way to see the executed plan of a frame that is localCheckpointed
+    or collected inside the operator."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
@@ -848,14 +844,76 @@ def test_incremental_dedup_broadcasts_batch_side(spark):
         return [seq.apply(i) for i in range(seq.size())]
 
     first = max((e.executionId() for e in executions()), default=-1) + 1
-    incremental_dedup(spark, "/root/testdata/sf0.001").collect()
-    inputs = [
-        sec.splitlines()[1]
-        for e in executions() if e.executionId() >= first
-        for sec in re.split(r"\n\(\d+\) ", e.physicalPlanDescription())
+    run()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() >= first]
+
+
+def _plan_nodes(desc: str) -> dict[int, str]:
+    """Node id -> its detail section ("(7) Generate ...") of a formatted
+    plan description."""
+    import re
+
+    return {int(m.group(1)): m.group(2)
+            for m in re.finditer(r"\n\((\d+)\) (.*?)(?=\n\(\d+\) |\Z)",
+                                 desc, re.S)}
+
+
+def test_incremental_dedup_broadcasts_batch_side(spark):
+    """Both channels broadcast the new batch, never the corpus: no
+    BroadcastExchange of the executed query carries ``old_id`` (near
+    channel postings) or ``o`` (exact channel md5 pairs). The result is
+    localCheckpointed, so the executed plan is read from the SQL status
+    store."""
+    import re
+
+    from extract_ocr_spark.operators.dedup import incremental_dedup
+
+    inputs = [sec.splitlines()[1] for d in _executed_plans(
+        spark, lambda: incremental_dedup(
+            spark, "/root/testdata/sf0.001").collect())
+        for sec in _plan_nodes(d).values()
         if sec.startswith("BroadcastExchange")]
     assert any("new_id" in i for i in inputs), inputs
     assert not any("old_id" in i for i in inputs), inputs
+    assert any(re.search(r"\bh#", i) for i in inputs), inputs
+    assert not any(re.search(r"\bo#", i) for i in inputs), inputs
+
+
+def test_similarity_scores_each_vector_once(spark):
+    """Per-vector folds run once per vector, not once per derived row:
+    no Project evaluating the k-means scorer (``array_min(``) sits
+    directly above the Lloyd update's posexplode Generate (there it ran
+    once per exploded dimension), and semdedup's within-cell pair join
+    folds no norm (``transform(``): each norm is folded once into the
+    persisted assignment and the join only divides by it."""
+    import re
+
+    from extract_ocr_spark.operators.similarity import (kmeans_clusters,
+                                                        semdedup)
+
+    sf = "/root/testdata/sf0.001"
+    generates = 0
+    for d in _executed_plans(spark, lambda: kmeans_clusters(spark, sf)
+                             .collect()):
+        nodes = _plan_nodes(d)
+        tree = re.findall(r"^[ :+\-*]*(\w+)(?: \w+)? +\((\d+)\)",
+                          d.split("\n\n", 1)[0], re.M)
+        for (up, i), (down, _) in zip(tree, tree[1:]):
+            if down == "Generate":
+                generates += 1
+                assert not (up == "Project"
+                            and "array_min(" in nodes[int(i)]), d
+    assert generates, "the Lloyd update ran no posexplode"
+
+    joins = [sec for d in _executed_plans(
+        spark, lambda: semdedup(spark, sf).collect())
+        for sec in _plan_nodes(d).values()
+        if sec.split(None, 1)[0].endswith("Join")]
+    assert joins, "semdedup ran no pair join"
+    for sec in joins:
+        assert "zip_with(" in sec, sec
+        assert "transform(" not in sec, sec
 
 
 def test_order_priority_counts_semi_join_and_pushdown(spark):

@@ -15,3 +15,20 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_root_tool_imports(name, monkeypatch):
     monkeypatch.syspath_prepend(ROOT)
     importlib.import_module(name)
+
+
+def test_sweep_top_stages_since_watermark(spark, monkeypatch):
+    """The sweep's stage rows: only stages after the watermark, costliest
+    first, at most three, each with run/CPU time, tasks and name."""
+    monkeypatch.syspath_prepend(ROOT)
+    bench_extra = importlib.import_module("bench_extra")
+
+    spark.range(1000).repartition(4).count()
+    mark = bench_extra.spark_totals(spark)["last_stage"]
+    spark.range(1000).repartition(4).selectExpr("sum(id)").collect()
+    top = bench_extra.top_stages(spark, mark)
+    assert 1 <= len(top) <= 3, top
+    assert all(t["stage"] > mark for t in top), (mark, top)
+    assert [t["run_s"] for t in top] == sorted(
+        (t["run_s"] for t in top), reverse=True), top
+    assert set(top[0]) == {"stage", "run_s", "cpu_s", "tasks", "name"}, top
